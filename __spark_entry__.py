@@ -402,8 +402,9 @@ def q_graph_uses_tool_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_graph_edges_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incrementally-maintained edges table (GraphSync: per-epoch diff +
-    MERGE of touched conversations only) — must equal the full rebuild."""
+    """Incrementally-maintained edges table (GraphSync: each change event
+    maps to its turn's two edge ops, MERGEd by the event's seq) — must
+    equal the full rebuild."""
     from sql_graph_visualizer_spark.streaming.graph_sync import GraphSync
 
     key = (sf_dir, "graphsync_edges")

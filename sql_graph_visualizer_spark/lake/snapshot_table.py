@@ -339,15 +339,6 @@ class PreparedMerge:
     # batch-wide max LSN — committed into the manifest's per-query seq
     # watermark (the tombstone-expiry safety horizon)
     max_seq: int = -1
-    # Optional: sc.broadcast of the SORTED winner LSNs (int64 ndarray),
-    # pre-collected during prepare. When present, the write phase filters
-    # survivors with a vectorized Arrow UDF against this array instead of
-    # building a broadcast-hash-join relation — the collect + relation
-    # build (~0.5-1 s of driver-serial time per epoch at 500k winners)
-    # moves into the prepare job, which the pipelined replay overlaps
-    # with the previous epoch's write. Per-epoch serial cost is what
-    # strong-scaling efficiency pays for at every cluster size.
-    winner_seqs: Any = None
     # bucket spec the affected-bucket set was computed under; if a
     # rebucket (monolithic or a progressive-migration frontier advance)
     # commits between prepare and upsert, merge_upsert detects the
@@ -979,8 +970,6 @@ class SnapshotTable:
         batch: DataFrame,
         op_col: str = "op",
         order_col: str = "seq",
-        collect_seqs: bool = False,
-        collect_max_keys: int = 4_000_000,
     ) -> PreparedMerge:
         """The winner-aggregation half of MERGE: one column-pruned scan of
         the batch (keys, order, op — fixed-width HashAggregate, map-side
@@ -1015,19 +1004,6 @@ class SnapshotTable:
             F.max(order_col).alias("mx"),
             F.collect_set(self._bucket_expr(m)).alias("bs"),
         ).collect()[0]
-        winner_seqs = None
-        if collect_seqs and 0 < int(agg["n"]) <= collect_max_keys:
-            # pre-collect the winning LSNs (Arrow toPandas off the
-            # persisted winners — one extra overlappable job) so the
-            # write phase needs no broadcast-relation build on its
-            # serial path; see PreparedMerge.winner_seqs. Size-guarded
-            # like the broadcast path: a giant epoch falls back to the
-            # join strategies instead of collecting to the driver.
-            import numpy as np
-
-            seqs = winners.select(F.col(order_col).cast("long")).toPandas()
-            arr = np.sort(seqs.iloc[:, 0].to_numpy(dtype="int64"))
-            winner_seqs = self.spark.sparkContext.broadcast(arr)
         return PreparedMerge(
             winners=winners,
             rows_in=int(agg["n"]),
@@ -1035,7 +1011,6 @@ class SnapshotTable:
             affected=sorted(int(b) for b in agg["bs"]),
             stats_ms=int((time.monotonic() - t0) * 1000),
             max_seq=int(agg["mx"]) if agg["mx"] is not None else -1,
-            winner_seqs=winner_seqs,
             num_buckets=int(m["num_buckets"]),
             spec_token=self._spec_token(m),
         )
@@ -1099,8 +1074,6 @@ class SnapshotTable:
         if epoch_id >= 0 and int(m["epochs"].get(query_id, -1)) >= epoch_id:
             if prepared is not None:
                 prepared.winners.unpersist()
-                if prepared.winner_seqs is not None:
-                    prepared.winner_seqs.unpersist()
             return MergeStats(epoch_id, 0, 0, 0, 0, True, 0, m["version"])
         # base snapshot facts for optimistic-concurrency validation
         base_schema_id = m["schema_id"]
@@ -1180,29 +1153,7 @@ class SnapshotTable:
             # but correct under out-of-order epochs and event re-delivery
             # (a stale version can never overwrite a newer one).
             payload = [F.col(f.name) for f in table_schema.fields]
-            if prepared.winner_seqs is not None:
-                # pre-collected winner LSNs (see merge_prepare): filter
-                # with a vectorized Arrow UDF (binary search per batch
-                # against the sorted broadcast array) — no broadcast-hash
-                # relation build on the epoch's serial path. A stray
-                # equal-seq duplicate would be harmless anyway: the final
-                # compact_lww re-picks the max-seq winner per key.
-                import numpy as np
-                import pandas as pd
-                from pyspark.sql.functions import pandas_udf
-
-                bc = prepared.winner_seqs
-
-                def _is_winner_batch(s):
-                    arr = bc.value
-                    v = s.to_numpy(dtype="int64", na_value=-1)
-                    idx = np.searchsorted(arr, v)
-                    ok = (idx < len(arr)) & (arr[np.minimum(idx, len(arr) - 1)] == v)
-                    return pd.Series(ok)
-
-                _is_winner = pandas_udf(_is_winner_batch, "boolean")
-                survivors = aligned.filter(_is_winner(F.col(order_col)))
-            elif rows_in <= broadcast_max_keys:
+            if rows_in <= broadcast_max_keys:
                 seqs = winners.select(order_col)
                 survivors = aligned.join(F.broadcast(seqs), on=order_col, how="left_semi")
             else:
@@ -1433,8 +1384,6 @@ class SnapshotTable:
             )
         finally:
             winners.unpersist()
-            if prepared.winner_seqs is not None:
-                prepared.winner_seqs.unpersist()
 
     def append(self, df: DataFrame, epoch_id: int = -1, query_id: str = "default") -> int:
         """Append-only commit (used by the lineage/metrics table)."""

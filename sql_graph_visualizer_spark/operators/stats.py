@@ -5,12 +5,13 @@ equi-width histogram; declared there but stubbed — implemented here).
 
 Everything is a plain aggregation plan (HashAggregate, map-side
 combined). Exact forms are the oracle-checkable defaults; the approx
-variants (HyperLogLog distinct, quantile sketch) are the 100 TB path —
-one pass, fixed memory, no exact-distinct shuffle of every value.
+variant (HyperLogLog distinct) is the 100 TB path — one pass, fixed
+memory, no exact-distinct shuffle of every value.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -72,15 +73,6 @@ def column_profile(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
     ).withColumn("avg_val", F.col("sum_val") / (F.col("n_rows") - F.col("n_nulls")))
 
 
-def numeric_quantiles(df: DataFrame, col: str, probs: list[float], rel_err: float = 0.01):
-    """Approximate quantiles via the Greenwald-Khanna sketch
-    (``approxQuantile``) — the scale path for histogram *bounds*
-    discovery: find lo/hi/median in one pass, then run
-    ``equi_width_histogram`` with fixed bounds so the heavy pass is a
-    plain hash aggregation. Driver-side result (list of floats)."""
-    return df.approxQuantile(col, probs, rel_err)
-
-
 # ------------------------------------------------- grouped-agg text digest
 
 DIGEST_MOD = 2305843009213693951  # 2^61 - 1 (Mersenne): sums never collide mod-wise by overflow
@@ -109,15 +101,18 @@ def group_digest(df: DataFrame, group_col: str, text_col: str = "text") -> DataF
     sum, headroom to ~1e18 rows per group) and tests assert equality —
     the UDAF form is the general shape for digests that are NOT
     decimal-expressible (e.g. xor/rolling digests)."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    def modsum(h):
+    @pandas_udf("long")
+    def digest(h: pd.Series) -> int:
         return int(sum(int(x) for x in h) % DIGEST_MOD)
 
-    # Spark disallows mixing GROUPED_AGG pandas UDFs with JVM aggregates
-    # in one agg clause, so the row count is a second pandas aggregate
-    digest = pandas_udf(modsum, "long", PandasUDFType.GROUPED_AGG)
-    nrows = pandas_udf(lambda h: len(h), "long", PandasUDFType.GROUPED_AGG)
+    # Spark disallows mixing grouped-aggregate pandas UDFs with JVM
+    # aggregates in one agg clause, so the row count is a second one
+    @pandas_udf("long")
+    def nrows(h: pd.Series) -> int:
+        return len(h)
+
     return (
         df.select(group_col, portable_hash60(text_col).alias("__h"))
         .groupBy(group_col)

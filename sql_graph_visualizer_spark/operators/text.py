@@ -99,14 +99,6 @@ def fingerprint(col: Column | str) -> Column:
     return F.md5(F.lower(F.regexp_replace(F.trim(c), r"\s+", " ")))
 
 
-def truncate_text(col: Column | str, max_len: int = 10_000) -> Column:
-    """The reference's Neo4j-safety truncation (transform_service.go:215),
-    kept configurable and OFF by default in the CDC path (SURVEY §7.3 —
-    it would break exact per-turn text equality)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.substring(c, 1, max_len)
-
-
 def analyze_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """One-pass document profile: all metrics as extra columns."""
     c = F.col(text_col)

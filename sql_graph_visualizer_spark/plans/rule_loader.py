@@ -111,11 +111,6 @@ def parse_rules(text: str) -> RuleSet:
     return out
 
 
-def load_rules(path: str) -> RuleSet:
-    with open(path) as f:
-        return parse_rules(f.read())
-
-
 def resolve_sources(
     spark: SparkSession, ruleset: RuleSet, tables: dict[str, DataFrame]
 ) -> dict[str, DataFrame]:

@@ -87,9 +87,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def stop_spark() -> None:
-    """Stop the active session (used by bench.py to switch parallelism)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

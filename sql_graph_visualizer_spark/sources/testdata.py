@@ -35,12 +35,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register all testdata tables as temp views for spark.sql use."""
-    for t in TABLES:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)
-
-
 def list_tables(
     spark: SparkSession,
     sf_dir: str = DEFAULT_SF_DIR,

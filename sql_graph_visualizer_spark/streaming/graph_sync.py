@@ -1,30 +1,28 @@
-"""Incremental graph materialization: keep derived node/edge tables in
+"""Incremental graph materialization: keep the derived edge table in
 sync with the transcripts table, epoch by epoch.
 
 The reference's signature loop re-derives metric edges every tick by
 deleting and re-creating them (``simple_metrics_injector.go:170-213``)
 — full recompute per tick. Here the derived graph is maintained
-incrementally (SURVEY §7.1 stage 7): each epoch recomputes edges ONLY
-for the conversations the batch touched, diffs them against the edge
-table's current rows for those conversations, and MERGEs
-updates + tombstones through the same epoch-fenced ``merge_upsert``
-path as the data — so the graph tables inherit exactly-once semantics
-and resume correctly after crash-replay.
+incrementally (SURVEY §7.1 stage 7) from the change events themselves:
+the row→graph mapping is a pure per-row function (a turn yields a
+``HAS_TURN`` edge and, if it has a tool, a ``USES_TOOL`` edge), so each
+event maps to exactly two edge ops stamped with the event's own ``seq``
+and keyed ``(conv_id, turn_idx, rel_type)``. One ``merge_upsert`` then
+applies them through the same epoch-fenced LWW path as the data.
 
-Work per epoch ∝ touched conversations, never graph size: at 10^10
-events the edge table is huge but an epoch touches a bounded set of
-``conv_id``s (the batch's key range). Both scans the diff needs — the
-transcripts slice and the current-edges slice — are **bucket-pruned**:
-the batch's conv_ids map to a bounded set of hash buckets (both tables
-bucket on ``conv_id``), so only those buckets' data files are read at
-all; a broadcast semi-join then filters the pruned scan to exactly the
-touched conversations. File IO per epoch is ∝ touched buckets, never
-table size — the same partition-pruning discipline MERGE itself uses.
+Because each edge key's versions are the transcripts key's versions,
+the edge table's LWW per key is exactly the transcripts table's LWW per
+turn: out-of-order epochs, re-delivered events and crash-replay all
+converge to the edges of the final state without reading the
+transcripts table. Work per epoch ∝ |batch|; the only table read is
+``merge_upsert``'s own bucket-pruned copy-on-write read of the edge
+table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,40 +39,54 @@ EDGE_TABLE_SCHEMA = T.StructType(
 )
 
 
+def _turn_edges(rows: DataFrame, *extra: Column | str) -> tuple[DataFrame, DataFrame]:
+    """The per-row edge mapping: ``(HAS_TURN, USES_TOOL)`` frames with
+    one row per input row each; ``dst`` of ``USES_TOOL`` is null when the
+    row has no tool. ``extra`` columns ride along unchanged."""
+    conv_id = F.col("conv_id")
+    turn_idx = F.col("turn_idx").cast("int")
+    turn_id = F.concat(F.lit("Turn:"), conv_id, F.lit(":"), turn_idx.cast("string"))
+    has_turn = rows.select(
+        F.concat(F.lit("Conversation:"), conv_id).alias("src"),
+        turn_id.alias("dst"),
+        F.lit("HAS_TURN").alias("rel_type"),
+        "conv_id",
+        turn_idx.alias("turn_idx"),
+        *extra,
+    )
+    uses_tool = rows.select(
+        turn_id.alias("src"),
+        F.concat(F.lit("Tool:"), F.col("tool")).alias("dst"),
+        F.lit("USES_TOOL").alias("rel_type"),
+        "conv_id",
+        turn_idx.alias("turn_idx"),
+        *extra,
+    )
+    return has_turn, uses_tool
+
+
 def derive_conv_edges(state: DataFrame) -> DataFrame:
     """conv→turn HAS_TURN and turn→tool USES_TOOL edges from (a slice of)
     the transcripts state — pure column expressions (the Arrow-UDF twin
     lives in plans/graph_builder.build_conv_edges_arrow; tests assert
     equality)."""
-    turn_id = F.concat(F.lit("Turn:"), F.col("conv_id"), F.lit(":"), F.col("turn_idx").cast("string"))
-    has_turn = state.select(
-        F.concat(F.lit("Conversation:"), F.col("conv_id")).alias("src"),
-        turn_id.alias("dst"),
-        F.lit("HAS_TURN").alias("rel_type"),
-        "conv_id",
-        "turn_idx",
-    )
-    uses_tool = state.filter(F.col("tool").isNotNull()).select(
-        turn_id.alias("src"),
-        F.concat(F.lit("Tool:"), F.col("tool")).alias("dst"),
-        F.lit("USES_TOOL").alias("rel_type"),
-        "conv_id",
-        "turn_idx",
-    )
-    return has_turn.unionByName(uses_tool)
+    has_turn, uses_tool = _turn_edges(state)
+    return has_turn.unionByName(uses_tool.filter(F.col("dst").isNotNull()))
 
 
 class GraphSync:
     """Maintains a derived edges SnapshotTable incrementally.
 
     Wire ``sync`` as the ``on_batch`` callback of ``replay_stream`` /
-    call it after each ``merge_upsert`` epoch. Edge identity =
-    ``(src, dst, rel_type)``; versions are fenced per epoch, so crash
-    re-delivery of an epoch is a no-op (same epoch id is skipped by the
-    table's fence; stale epochs lose LWW on the synthetic seq).
+    call it after each ``merge_upsert`` epoch with that epoch's change
+    events. Edge identity = ``(conv_id, turn_idx, rel_type)`` (one
+    ``HAS_TURN`` and at most one ``USES_TOOL`` edge per turn), bucketed on
+    ``conv_id``. A re-delivered epoch id is skipped by the table's fence;
+    an older event loses LWW on its own ``seq``.
     """
 
-    EDGE_KEY_COLS = ["conv_id", "src", "dst", "rel_type"]
+    EDGE_KEY_COLS = ["conv_id", "turn_idx", "rel_type"]
+    TRANSCRIPT_KEY_COLS = ["conv_id", "turn_idx"]
 
     def __init__(
         self,
@@ -83,26 +95,23 @@ class GraphSync:
         transcripts: SnapshotTable,
         num_buckets: int = 32,
     ):
-        self.spark = spark
-        self.transcripts = transcripts
+        # the per-event derivation is exact only if one transcripts key
+        # is one turn: its events then version exactly that turn's edges
+        t_keys = list(transcripts.manifest()["key_cols"])
+        if t_keys != self.TRANSCRIPT_KEY_COLS:
+            raise ValueError(
+                f"GraphSync needs a transcripts table keyed on {self.TRANSCRIPT_KEY_COLS}, "
+                f"got {t_keys}"
+            )
         if SnapshotTable.exists(path):
             self.edges = SnapshotTable(spark, path)
-            # Bucket pruning is only sound if the files on disk are
-            # physically bucketed the way we are about to prune them. A
-            # table created by an older layout (e.g. bucket_col=src) would
-            # silently miss existing edges for touched conversations if we
-            # pruned its scan with bucket_id('conv_id') — so verify the
-            # manifest's spec and fall back to an unpruned current-edges
-            # read when it does not match.
-            m = self.edges.manifest()
-            self._prune_edges = (
-                m["bucket_col"] == "conv_id" and list(m["key_cols"]) == self.EDGE_KEY_COLS
-            )
+            e_keys = list(self.edges.manifest()["key_cols"])
+            if e_keys != self.EDGE_KEY_COLS:
+                raise ValueError(
+                    f"edge table at {path} is keyed on {e_keys}, not {self.EDGE_KEY_COLS}; "
+                    "delete it and rebuild it from the transcripts table"
+                )
         else:
-            # conv_id leads the key (it is functionally determined by src,
-            # so edge identity is unchanged) and is the bucket column:
-            # every edge of a conversation lands in one bucket, which is
-            # what lets sync() prune both scans by the batch's conv_ids.
             self.edges = SnapshotTable.create(
                 spark,
                 path,
@@ -111,60 +120,33 @@ class GraphSync:
                 bucket_col="conv_id",
                 num_buckets=num_buckets,
             )
-            self._prune_edges = True
 
     def sync(self, batch: DataFrame, epoch_id: int, st: MergeStats | None = None) -> MergeStats:
-        """Diff-and-merge the edges of the conversations ``batch`` touched.
+        """Merge the two edge ops of every change event in ``batch``:
 
-        new  = edges derived from the post-merge state of touched convs
-        old  = edge table's current rows for touched convs
-        ops  = upsert(new) + delete(old − new)
+        - ``HAS_TURN``: update, or delete when ``op='delete'``
+        - ``USES_TOOL``: update to ``Tool:<tool>``, or delete when
+          ``op='delete'`` or the turn has no tool
 
-        Versions are stamped with the transcripts table's snapshot
-        version (monotone in APPLICATION order), not the epoch id: under
-        out-of-order epochs a later-applied sync observed newer state and
-        must win LWW even if its epoch id is smaller.
+        Both carry the event's ``seq`` under different keys, so
+        ``(key, seq)`` stays unique as ``merge_upsert`` requires. ``st``
+        (the transcripts merge's stats) is accepted for the ``on_batch``
+        signature and unused. The edge table is written as an unordered
+        writer (its tombstone horizon stays pinned): its epochs carry the
+        stream's LSNs, which need not rise epoch over epoch.
         """
-        touched = batch.select("conv_id").distinct().persist()
-        # bucket-prune both scans: the touched conv_ids map to a bounded
-        # bucket set in each table (≤ num_buckets values — one tiny agg
-        # job), so unaffected buckets' files are never opened. The
-        # broadcast semi-join below then trims the pruned scan to exactly
-        # the touched conversations. Each table's manifest is resolved
-        # ONCE and pinned for both the bucket-id derivation and the
-        # pruned read — a rebucket migration committing between the two
-        # would otherwise prune the new layout with old-spec ids.
-        tm = self.transcripts.manifest()
-        em = self.edges.manifest()
-        b = touched.agg(
-            F.collect_set(self.transcripts.bucket_id("conv_id", manifest=tm)).alias("tb"),
-            F.collect_set(self.edges.bucket_id("conv_id", manifest=em)).alias("eb"),
-        ).collect()[0]
-        t_buckets = sorted(int(x) for x in b["tb"])
-        e_buckets = sorted(int(x) for x in b["eb"]) if self._prune_edges else None
-        state = self.transcripts.read(buckets=t_buckets, manifest=tm).join(
-            F.broadcast(touched), on="conv_id", how="left_semi"
-        )
-        new_edges = derive_conv_edges(state)
-        old_edges = self.edges.read(buckets=e_buckets, manifest=em).join(
-            F.broadcast(touched), on="conv_id", how="left_semi"
-        )
-        keys = ["src", "dst", "rel_type"]
-        gone = old_edges.select(*EDGE_TABLE_SCHEMA.fieldNames()).join(
-            new_edges.select(*keys), on=keys, how="left_anti"
-        )
-        version = int(
-            st.snapshot_version if st is not None else self.transcripts.manifest()["version"]
-        )
-        events = new_edges.withColumn("op", F.lit("update")).unionByName(
-            gone.withColumn("op", F.lit("delete"))
-        ).withColumn("seq", F.lit(version).cast("long"))
-        try:
-            return self.edges.merge_upsert(
-                events, epoch_id=int(epoch_id), query_id="graph-sync"
+        has_turn, uses_tool = _turn_edges(batch, "seq", "op")
+        deleted = F.col("op") == "delete"
+        ops = has_turn.withColumn(
+            "op", F.when(deleted, "delete").otherwise("update")
+        ).unionByName(
+            uses_tool.withColumn(
+                "op", F.when(deleted | F.col("dst").isNull(), "delete").otherwise("update")
             )
-        finally:
-            touched.unpersist()
+        )
+        return self.edges.merge_upsert(
+            ops, epoch_id=int(epoch_id), query_id="graph-sync", ordered_writer=False
+        )
 
     def read(self) -> DataFrame:
         return self.edges.read()

@@ -297,9 +297,7 @@ def replay_stream(
     return query
 
 
-def _probe_file_seq_ranges(
-    log: DataFrame, src: dict, order_col: str
-) -> list[tuple[str, int, int]]:
+def _probe_file_seq_ranges(log: DataFrame, order_col: str) -> list[tuple[str, int, int]]:
     """Per-file ``(path, min_seq, max_seq)`` of a file-backed JSON log —
     the manual analogue of parquet row-group statistics (guide §6).
     One single-column pass over the log (the JSON parser skips every
@@ -311,10 +309,14 @@ def _probe_file_seq_ranges(
     replay skips ~(epochs-1)/epochs of the gzip decompress+parse work
     per epoch. Exactness does not depend on that layout: the ranges are
     computed from the data and the chunk filter still applies, so an
-    unordered log merely skips fewer files."""
+    unordered log merely skips fewer files.
+
+    The probe reads ``log.inputFiles()`` — the files listed when the log
+    was read — not the source directory again: a file that lands there
+    later is not part of ``log`` and must not reach any epoch."""
     spark = log.sparkSession
     fld = log.schema[order_col]
-    probe = spark.read.schema(T.StructType([fld])).json(src["path"])
+    probe = spark.read.schema(T.StructType([fld])).json(log.inputFiles())
     rows = (
         probe.groupBy(F.input_file_name().alias("__f"))
         .agg(F.min(order_col).alias("lo"), F.max(order_col).alias("hi"))
@@ -334,7 +336,6 @@ def replay_batch(
     bounds: tuple[int, int] | None = None,
     pipeline: bool = True,
     conflict_retries: int = 2,
-    prefetch_seqs: bool = False,
     merge_mode: str = "cow",
     auto_compact_layers: int | None = None,
     auto_compact_async: bool = False,
@@ -388,35 +389,19 @@ def replay_batch(
     replay skips ~(epochs-1)/epochs of the decompress+parse per epoch;
     results are exact regardless of layout (the chunk filter still
     applies — an unordered log just skips fewer files). Parquet logs
-    take the unchanged path (native predicate pushdown).
-
-    ``prefetch_seqs``: additionally pre-collect each epoch's winner LSNs
-    during prepare and filter survivors via a broadcast sorted array +
-    Arrow UDF instead of a broadcast-hash join (see
-    ``PreparedMerge.winner_seqs``). Off by default: measured on this
-    sandbox (local-cluster 4x4, 16M events, best-of-2) it is ~11%
-    SLOWER — the Arrow column round-trip costs more than the ~0.7 s/epoch
-    broadcast-relation build it hides. The path exists (and is tested)
-    because on a real wide cluster the trade can flip: the driver-side
-    relation build is serial at ANY cluster size, while the Arrow filter
-    cost shrinks with executors."""
+    take the unchanged path (native predicate pushdown)."""
     # file-skipping eligibility (r8, guide §6): the log is a plain
     # file-backed JSON scan (tagged by read_cdc_log) — parquet logs get
     # native row-group pushdown and need no help. The per-file seq
     # ranges are memoized on the DataFrame object (its file listing is
     # fixed at read time, so the ranges are immutable with it); each
     # bench/oracle invocation builds a fresh DataFrame and re-probes.
-    src = getattr(log, "_sgv_file_source", None)
-    if src is not None and (
-        src.get("fmt") != "json"
-        or os.environ.get("SPARK_GRAFT_REPLAY_FILE_SKIP", "1") != "1"
-    ):
-        src = None
+    json_log = getattr(log, "_sgv_file_source", {}).get("fmt") == "json"
     ranges: list[tuple[str, int, int]] | None = getattr(log, "_sgv_file_ranges", None)
     if bounds is None:
-        if src is not None and epochs >= 2:
+        if json_log and epochs >= 2:
             if ranges is None:
-                ranges = _probe_file_seq_ranges(log, src, order_col)
+                ranges = _probe_file_seq_ranges(log, order_col)
                 log._sgv_file_ranges = ranges
             if not ranges:
                 return []
@@ -434,9 +419,9 @@ def replay_batch(
     # big-log regime (no cache): skip whole files per epoch instead.
     # With a persisted log the chunk filters read the cache — per-epoch
     # file readers would bypass it, so the two paths are exclusive.
-    use_files = src is not None and not persist_log and epochs >= 2
+    use_files = json_log and not persist_log and epochs >= 2
     if use_files and ranges is None:
-        ranges = _probe_file_seq_ranges(log, src, order_col)
+        ranges = _probe_file_seq_ranges(log, order_col)
         log._sgv_file_ranges = ranges
     if persist_log and log.storageLevel.useMemory is False and log.storageLevel.useDisk is False:
         # DISK_ONLY, not MEMORY_AND_DISK: the replay's own shuffles and
@@ -478,15 +463,14 @@ def replay_batch(
             nxt = None
             if pipeline:
                 nxt = pool.submit(
-                    table.merge_prepare, chunk_of(0), order_col=order_col, collect_seqs=prefetch_seqs
+                    table.merge_prepare, chunk_of(0), order_col=order_col
                 )
             for e in range(epochs):
                 chunk = chunk_of(e)
                 prepared = nxt.result() if nxt is not None else None
                 nxt = (
                     pool.submit(
-                        table.merge_prepare, chunk_of(e + 1), order_col=order_col,
-                        collect_seqs=prefetch_seqs,
+                        table.merge_prepare, chunk_of(e + 1), order_col=order_col
                     )
                     if pipeline and e + 1 < epochs
                     else None

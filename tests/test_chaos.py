@@ -211,8 +211,8 @@ def test_sigkill_between_data_and_derived_commits_converges(
     after the data commit but before (or between) the derived commits.
     The epoch fence makes each derived table catch up independently on
     restart: the re-delivered epoch is a fenced no-op on the transcript
-    table, GraphSync recomputes the touched slice against the current
-    state, RollupSync time-travels to the ORIGINAL commit's snapshot
+    table, GraphSync re-derives the epoch's edge ops from its events,
+    RollupSync time-travels to the ORIGINAL commit's snapshot
     pair via the (query_id, epoch) manifest summary. Both kill points ×
     both merge arms converge to the full-rebuild oracles with exactly
     one committed lineage row per epoch per table."""

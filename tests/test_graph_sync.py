@@ -66,39 +66,68 @@ def test_sync_is_epoch_fenced(spark, tmp_path):
     assert _edge_set(gs.read()) == before
 
 
-def test_sync_prunes_buckets(spark, tmp_path, monkeypatch):
-    """Per-epoch scans read only the buckets the batch's conv_ids map to —
-    file IO ∝ touched conversations, not table size (the 10^10-event
-    design point: VERDICT r1 flagged the previous full-table semi-join)."""
+def test_sync_never_reads_the_transcripts_table(spark, tmp_path, monkeypatch):
+    """sync() derives edge ops from the change events alone: while it
+    runs, the transcripts table is never read (the edge table is read
+    only by merge_upsert's own bucket-pruned copy-on-write read), and the
+    result still equals a full rebuild from the final state."""
     log = gen_cdc_log(spark, 2000, num_convs=24, turns_per_conv=6)
     t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, KEYS, num_buckets=8)
     gs = GraphSync(spark, str(tmp_path / "edges"), t)
     st0 = t.merge_upsert(log, epoch_id=0, query_id="q")
-    gs.sync(log, 0, st0)
-
-    seen: list[tuple[str, list[int] | None]] = []
-    orig_read = SnapshotTable.read
-
-    def spy_read(self, buckets=None, **kw):
-        seen.append((self.path, None if buckets is None else sorted(buckets)))
-        return orig_read(self, buckets=buckets, **kw)
-
-    monkeypatch.setattr(SnapshotTable, "read", spy_read)
     one_conv = log.filter(F.col("conv_id") == "conv-000001").limit(3).withColumn(
         "seq", F.col("seq") + 10_000
     )
     st1 = t.merge_upsert(one_conv, epoch_id=1, query_id="q")
+
+    seen: list[tuple[str, list[int] | None]] = []
+    orig_read = SnapshotTable.read
+    orig_sync = GraphSync.sync
+
+    def spy_sync(self, *args, **kwargs):
+        def spy_read(table, buckets=None, **kw):
+            seen.append((table.path, None if buckets is None else sorted(buckets)))
+            return orig_read(table, buckets=buckets, **kw)
+
+        monkeypatch.setattr(SnapshotTable, "read", spy_read)
+        try:
+            return orig_sync(self, *args, **kwargs)
+        finally:
+            monkeypatch.setattr(SnapshotTable, "read", orig_read)
+
+    monkeypatch.setattr(GraphSync, "sync", spy_sync)
+    gs.sync(log, 0, st0)
     gs.sync(one_conv, 1, st1)
     monkeypatch.undo()
 
-    # sync()'s two table scans (transcripts slice + current-edges slice)
-    # were both bucket-pruned to the single bucket one conv_id hashes to
-    t_scans = [b for p, b in seen if p == t.path and b is not None]
-    e_scans = [b for p, b in seen if p == gs.edges.path and b is not None]
-    assert t_scans and all(len(b) == 1 for b in t_scans)
-    assert e_scans and all(len(b) == 1 for b in e_scans)
-    # and pruning never changed the result
+    assert seen, "the spy saw no read at all"
+    assert all(p == gs.edges.path for p, _ in seen), seen
+    # the second epoch touched one conversation: one edge bucket read
+    assert seen[-1][1] is not None and len(seen[-1][1]) == 1
     assert _edge_set(gs.read()) == _edge_set(derive_conv_edges(t.read()))
+
+
+def test_out_of_order_epochs_keep_the_newest_tool(spark, tmp_path):
+    """Epoch 0 carries seq 7 (tool B), epoch 1 the OLDER seq 5 (tool A)
+    for the same turn: edge LWW follows the event seq, not the epoch, so
+    Tool:B survives — as it does in the transcripts table."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, KEYS, num_buckets=4)
+    gs = GraphSync(spark, str(tmp_path / "edges"), t)
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows,
+        "seq long, op string, conv_id string, turn_idx int, role string, "
+        "text string, tool string, ts timestamp",
+    )
+    for epoch, batch in enumerate(
+        [mk([(7, "update", "c", 0, "tool", "b", "B", None)]),
+         mk([(5, "insert", "c", 0, "tool", "a", "A", None)])]
+    ):
+        st = t.merge_upsert(batch, epoch_id=epoch, query_id="q", ordered_writer=False)
+        gs.sync(batch, epoch, st)
+    edges = _edge_set(gs.read())
+    assert ("Turn:c:0", "Tool:B", "USES_TOOL") in edges
+    assert ("Turn:c:0", "Tool:A", "USES_TOOL") not in edges
+    assert edges == _edge_set(derive_conv_edges(t.read()))
 
 
 def test_sync_removes_edges_of_deleted_turns(spark, tmp_path):
@@ -128,51 +157,22 @@ def test_sync_removes_edges_of_deleted_turns(spark, tmp_path):
     assert edges == {("Conversation:c", "Turn:c:0", "HAS_TURN")}
 
 
-def test_open_legacy_bucket_layout_falls_back_to_unpruned(spark, tmp_path, monkeypatch):
-    """An existing edge table created with an older physical layout
-    (bucket_col=src) must not be bucket-pruned by conv_id: the manifest
-    spec is verified on open and sync() falls back to an unpruned
-    current-edges read, so stale edges of touched conversations are still
-    diffed and deleted (ADVICE r2)."""
+def test_open_edge_table_with_other_key_layout_raises(spark, tmp_path):
+    """An existing edge table keyed any other way (e.g. the older
+    (conv_id, src, dst, rel_type) layout) cannot take per-event edge ops:
+    opening it through GraphSync raises instead of syncing into it."""
+    import pytest
+
     from sql_graph_visualizer_spark.streaming.graph_sync import EDGE_TABLE_SCHEMA
 
     t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, KEYS, num_buckets=8)
-    # legacy-layout edge table: bucketed (physically!) on src, keyed without conv_id
-    legacy = SnapshotTable.create(
+    SnapshotTable.create(
         spark,
         str(tmp_path / "edges"),
         EDGE_TABLE_SCHEMA,
-        key_cols=["src", "dst", "rel_type"],
-        bucket_col="src",
+        key_cols=["conv_id", "src", "dst", "rel_type"],
+        bucket_col="conv_id",
         num_buckets=8,
     )
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows,
-        "seq long, op string, conv_id string, turn_idx int, role string, "
-        "text string, tool string, ts timestamp",
-    )
-    b0 = mk(
-        [
-            (1, "insert", "c", 0, "user", "hi", None, None),
-            (2, "insert", "c", 1, "tool", "out", "search", None),
-        ]
-    )
-    st0 = t.merge_upsert(b0, epoch_id=0, query_id="q")
-    legacy.merge_upsert(
-        derive_conv_edges(t.read())
-        .withColumn("op", F.lit("update"))
-        .withColumn("seq", F.lit(int(st0.snapshot_version)).cast("long")),
-        epoch_id=0,
-        query_id="graph-sync",
-    )
-    # reopen through GraphSync: must detect the legacy spec
-    gs = GraphSync(spark, str(tmp_path / "edges"), t)
-    assert gs._prune_edges is False
-    # update turn 1 to drop its tool -> the old USES_TOOL edge must be
-    # found (despite the foreign bucketing) and deleted
-    b1 = mk([(3, "update", "c", 1, "tool", "out2", None, None)])
-    st1 = t.merge_upsert(b1, epoch_id=1, query_id="q")
-    gs.sync(b1, 1, st1)
-    edges = _edge_set(gs.read())
-    assert ("Turn:c:1", "Tool:search", "USES_TOOL") not in edges
-    assert edges == _edge_set(derive_conv_edges(t.read()))
+    with pytest.raises(ValueError, match="rebuild"):
+        GraphSync(spark, str(tmp_path / "edges"), t)

@@ -322,7 +322,7 @@ def test_mor_racing_incompatible_evolution_conflicts(spark, tmp_path):
 
 
 def test_bucket_pruned_read_applies_deltas(spark, tmp_path):
-    """A pruned read (the MERGE/GraphSync path) of a delta-carrying
+    """A pruned read (the CoW MERGE path) of a delta-carrying
     bucket folds that bucket's deltas — and ONLY delta buckets pay the
     LWW pass (plain buckets union in untouched)."""
     t = _table(spark, tmp_path, buckets=8)
@@ -516,10 +516,10 @@ def test_mor_read_plan_shape(spark, tmp_path):
 
 
 def test_graph_sync_over_mor_table(spark, tmp_path):
-    """Derived-table maintenance composes with merge-on-read: GraphSync's
-    bucket-pruned transcript reads must see the LWW-folded base∪delta
-    state, so the incrementally-maintained edges equal a full rebuild
-    even while the base table is all deltas."""
+    """Derived-table maintenance composes with merge-on-read: the edges
+    GraphSync derives from each epoch's events equal a full rebuild from
+    the LWW-folded base∪delta state, even while the base table is all
+    deltas."""
     from sql_graph_visualizer_spark.streaming.graph_sync import (
         GraphSync,
         derive_conv_edges,

@@ -231,23 +231,28 @@ def test_tombstone_horizon_guard_blocks_resurrection(spark, tmp_path):
     assert t2.read().filter("conv_id = 'K'").count() == 0
 
 
-def test_prefetch_seqs_filter_matches_default_path(spark, tmp_path):
-    """prefetch_seqs=True (winner LSNs pre-collected in prepare, survivors
-    filtered by a broadcast sorted array + Arrow UDF) must produce the
-    exact same merged state as the default broadcast-hash-join path."""
-    import os
+def test_json_file_skipping_ignores_files_added_after_the_read(spark, tmp_path):
+    """The per-file seq probe covers the files the log was read from: a
+    file that lands in the log directory after ``read_cdc_log`` is not
+    part of the frame, so the replay must not pick its events up."""
+    import glob
+    import shutil
 
-    from sql_graph_visualizer_spark.lake.snapshot_table import SnapshotTable
+    from sql_graph_visualizer_spark.sources.cdc_gen import read_cdc_log
 
-    log = gen_cdc_log(spark, 1200, num_convs=10, turns_per_conv=6)
-    mk = lambda n: SnapshotTable.create(  # noqa: E731
-        spark, os.path.join(str(tmp_path), n), SCHEMA, ["conv_id", "turn_idx"], num_buckets=8
-    )
-    t1, t2 = mk("default"), mk("prefetch")
-    replay_batch(log, t1, epochs=3)
-    replay_batch(log, t2, epochs=3, prefetch_seqs=True)
-    rows = lambda t: sorted(map(tuple, t.read().collect()))  # noqa: E731
-    assert rows(t1) == rows(t2)
+    log_dir, late_dir = str(tmp_path / "jl"), str(tmp_path / "late")
+    log = gen_cdc_log(spark, 2000, num_convs=10, turns_per_conv=8)
+    write_cdc_log_dir(log, log_dir, num_files=4, fmt="json")
+    jlog = read_cdc_log(spark, log_dir, fmt="json")
+    # newer versions of the same keys, shipped after the read
+    late = log.withColumn("seq", F.col("seq") + 2000).withColumn("text", F.lit("late"))
+    write_cdc_log_dir(late, late_dir, num_files=1, fmt="json")
+    for i, f in enumerate(glob.glob(os.path.join(late_dir, "part-*"))):
+        shutil.copy(f, os.path.join(log_dir, f"part-late-{i}.json.gz"))
+
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, KEYS, num_buckets=8)
+    replay_batch(jlog, t, epochs=4, persist_log=False)
+    assert _state(t) == _expected(jlog)
 
 
 def test_drop_watermark_unpins_horizon_and_conflicts_on_live_writer(spark, tmp_path):
