@@ -225,11 +225,8 @@ def plans(tag: str) -> None:
     log = derive_cdc_log(spark, SF_DIR)
     cap("merge_compact_lww", compact_lww(log))
 
-    # the MERGE WRITE JOB's frame, exactly as merge_upsert builds it
-    # (feature-detected so the same capture runs on the round-start tree
-    # in a worktree: old = compact-by-key exchange + repartition-by-
-    # bucket exchange; r8 = one routing exchange shared by the fold)
-    from pyspark.sql import types as T  # noqa: PLC0415
+    # the MERGE WRITE JOB's frame, exactly as merge_upsert builds it: one
+    # routing exchange shared by the fold (compact_lww's routed form)
     from sql_graph_visualizer_spark.lake.snapshot_table import SnapshotTable
     from sql_graph_visualizer_spark.sources.events_cdc import TRANSCRIPT_SCHEMA
 
@@ -239,48 +236,33 @@ def plans(tag: str) -> None:
     )
     m = t.manifest()
     payload = [F.col(f.name) for f in TRANSCRIPT_SCHEMA.fields]
-    staged = log  # batch events: payload + seq + op (empty table → no existing arm)
-    if hasattr(t, "_route_for_write"):  # r8 one-exchange compact+write
-        routed, route_cols = t._route_for_write(staged, m)
-        folded = compact_lww(
-            routed, (*route_cols, "conv_id", "turn_idx"), "seq",
-            broadcast_winner_seqs="sort",
-        )
-        frame = folded.select(
-            *payload, F.col("seq").cast("long").alias("_seq"),
-            (F.col("op") == "delete").alias("_deleted"), "__b",
-        )
-    else:  # round-start: fold by key, then re-shuffle by bucket
-        final = compact_lww(
-            staged, ("conv_id", "turn_idx"), "seq", broadcast_winner_seqs="sort"
-        )
-        result = final.select(
-            *payload, F.col("seq").cast("long").alias("_seq"),
-            (F.col("op") == "delete").alias("_deleted"),
-        )
-        frame = result.withColumn("__b", t._bucket_expr(m)).repartition(F.col("__b"))
+    # batch events: payload + seq + op (empty table → no existing arm)
+    routed, route_cols = t._route_for_write(log, m)
+    folded = compact_lww(routed, ("conv_id", "turn_idx"), ("seq",), route_cols)
+    frame = folded.select(
+        *payload, F.col("seq").cast("long").alias("_seq"),
+        (F.col("op") == "delete").alias("_deleted"), "__b",
+    )
     cap("merge_write", frame)
 
-    # one replay epoch's CHUNK SCAN over a gzip-JSON log (feature-
-    # detected: r8 probes per-file seq ranges and reads only the files
-    # intersecting the epoch; round-start filtered the full-log scan)
+    # one replay epoch's CHUNK SCAN over a gzip-JSON log: the per-file seq
+    # ranges select the files intersecting the epoch's range
     from sql_graph_visualizer_spark.sources.cdc_gen import (
         gen_cdc_log, read_cdc_log, write_cdc_log_dir,
     )
+    from sql_graph_visualizer_spark.streaming.replay import _probe_file_seq_ranges
 
     jdir = os.path.join(scratch, "plan_jlog")
     write_cdc_log_dir(gen_cdc_log(spark, 100_000, num_convs=500), jdir, num_files=16, fmt="json")
     jlog = read_cdc_log(spark, jdir, fmt="json")
-    try:
-        from sql_graph_visualizer_spark.streaming.replay import _probe_file_seq_ranges
-
-        ranges = _probe_file_seq_ranges(jlog, {"path": jdir, "fmt": "json"}, "seq")
-        e_lo, e_hi = 0, 25_000  # epoch 0 of 4
-        files = [f for f, mn, mx in ranges if mn < e_hi and mx >= e_lo]
+    e_lo, e_hi = 0, 25_000  # epoch 0 of 4
+    ranges = _probe_file_seq_ranges(jlog, "seq")
+    files = [f for f, mn, mx in ranges if mn < e_hi and mx >= e_lo]
+    if files:
         chunk = spark.read.schema(jlog.schema).json(files)
-        chunk = chunk.filter((chunk["seq"] >= e_lo) & (chunk["seq"] < e_hi))
-    except ImportError:  # round-start tree: full-scan chunk
-        chunk = jlog.filter((jlog["seq"] >= 0) & (jlog["seq"] < 25_000))
+    else:  # no file holds the epoch's range: an empty chunk, not a full scan
+        chunk = spark.createDataFrame([], jlog.schema)
+    chunk = chunk.filter((chunk["seq"] >= e_lo) & (chunk["seq"] < e_hi))
     cap("cdc_replay_chunk", chunk)
     cap("cdc_final_state", E.q_cdc_final_state(spark, SF_DIR))
     cap("graph_edges_arrow", build_conv_edges_arrow(E.q_cdc_final_state(spark, SF_DIR)))

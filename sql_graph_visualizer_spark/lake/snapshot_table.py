@@ -37,9 +37,11 @@ above it is backend-agnostic:
   bytes written per epoch ∝ |batch|, never ∝ touched-bucket bytes
   (Iceberg v2 merge-on-read / Delta deletion-vector analogue, restated
   as LWW row deltas because this table's MERGE is pure LWW-by-LSN).
-  Reads apply last-writer-wins over base ∪ deltas per key (``_fold_lww``:
-  fixed-width hash-agg winners + one null-safe keyed join; the payload
-  never sorts) and skip that work entirely for buckets with no deltas. ``compact_deltas()`` is the background
+  Reads apply last-writer-wins over base ∪ deltas per key
+  (``operators.compaction.compact_lww``: fixed-width hash-agg winners,
+  one null-safe keyed semi-join, then the deterministic tie order over
+  the ~|keys| survivors) and skip that work entirely for buckets with no
+  deltas. ``compact_deltas()`` is the background
   maintenance job that folds deltas back into the base (conflict-safe
   against concurrent ingest via the same bucket-token validation).
 - **Bucket-count evolution** (``rebucket``): ``num_buckets`` is chosen at
@@ -102,6 +104,11 @@ _DATA_DIR = "data"
 _SEQ = "_seq"
 _DELETED = "_deleted"
 
+# MERGE survivor pre-filter: broadcast the winner LSNs (≈8 bytes/key)
+# while an epoch has at most this many keys; above it, a keyed shuffle
+# semi-join (a giant epoch costs an extra shuffle, not a driver OOM)
+_BROADCAST_MAX_KEYS = 4_000_000
+
 
 def _refs_total_bytes(segments: dict[str, dict[str, Any]]) -> int:
     return sum(int(s.get("bytes", 0)) for s in segments.values())
@@ -161,57 +168,6 @@ def _partition_tokens(n: int) -> list[int]:
     tokens = [found[b] for b in range(n)]
     _PART_TOKEN_CACHE[n] = tokens
     return tokens
-
-
-def _contains_map(dt: T.DataType) -> bool:
-    """True if the type tree contains a MapType anywhere. Spark's
-    set-operation (``distinct``) type check is recursive — a map nested
-    inside an array or struct is just as unhashable as a top-level one —
-    so the ``_fold_lww`` guard must walk the whole tree, not only the
-    top-level fields."""
-    if isinstance(dt, T.MapType):
-        return True
-    if isinstance(dt, T.ArrayType):
-        return _contains_map(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return any(_contains_map(f.dataType) for f in dt.fields)
-    return False
-
-
-def _fold_lww(staged: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Read-side LWW fold over base ∪ delta rows (merge-on-read).
-
-    ``(key, _seq)`` is unique within any ONE generation (each generation
-    writes a key at most once, LSNs are globally unique), so the winner
-    filter is a fixed-width ``max(_seq)`` HashAggregate (map-side
-    combined) plus one null-safe keyed equi-join. The payload shuffles
-    once on the keys and is NEVER sorted — ``compact_lww``'s thin
-    ``max_by`` dedupe would compile to a SortAggregate over the whole
-    folded selection here (the plan-shape test asserts it stays out).
-    Key equality must be null-safe: table keys may be NULL and a plain
-    join would silently drop those rows.
-
-    ACROSS generations the winning (key, _seq) can legitimately appear
-    more than once: at-least-once delivery may re-deliver the winning
-    event in a later epoch (a second delta segment), or after a
-    compaction baked it into the base. The contract ("re-delivery of
-    the winning event collapses to one row", and CoW honors it via
-    ``compact_lww``) requires collapsing those ties here too. The rows
-    are byte-identical by contract (two *different* payloads sharing
-    (key, order) are a malformed log), so a full-row hash ``distinct``
-    is exact — and stays HashAggregate: variable-width columns are fine
-    as grouping KEYS; only variable-width agg BUFFERS trigger the
-    SortAggregate trap. Map-typed columns cannot be grouping keys, so
-    those schemas fall back to ``dropDuplicates`` on (key, _seq)."""
-    winners = staged.groupBy(*key_cols).agg(F.max(_SEQ).alias("__max_seq"))
-    s, w = staged.alias("s"), winners.alias("w")
-    cond = F.col(f"s.{_SEQ}") == F.col("w.__max_seq")
-    for k in key_cols:
-        cond = cond & F.col(f"s.{k}").eqNullSafe(F.col(f"w.{k}"))
-    folded = s.join(w, cond).select("s.*")
-    if any(_contains_map(f.dataType) for f in staged.schema.fields):
-        return folded.dropDuplicates(list(key_cols) + [_SEQ])
-    return folded.distinct()
 
 
 def _advance_watermark(
@@ -840,11 +796,12 @@ class SnapshotTable:
 
         Merge-on-read: buckets carrying delta segments are resolved by a
         last-writer-wins compaction over base ∪ deltas per key (max
-        ``_seq`` wins; same semantics the CoW write path applies
-        eagerly). The LWW pass is the hash-agg + keyed-join form — the
-        payload shuffles once on the key columns and is never sorted —
-        and is skipped entirely when the selected buckets have no
-        deltas, so a fully-compacted table reads at plain scan speed."""
+        ``_seq`` wins; ties on ``_seq`` resolve by ``compact_lww``'s
+        content order, so a re-delivered winner collapses to one row).
+        The fold is ``compact_lww``'s raw form — no SortAggregate; only
+        the ~|keys| rows at each key's max ``_seq`` are sorted — and is
+        skipped entirely when the selected buckets have no deltas, so a
+        fully-compacted table reads at plain scan speed."""
         m = manifest if manifest is not None else self.manifest(version)
         sel = None if buckets is None else {int(b) for b in buckets}
         delta_b = {
@@ -868,7 +825,7 @@ class SnapshotTable:
                 self._entries(m, sorted(delta_b))
                 + self._delta_entries(m, sorted(delta_b)),
             )
-            folded = _fold_lww(staged, list(m["key_cols"]))
+            folded = compact_lww(staged, tuple(m["key_cols"]), (_SEQ,))
             df = self._read_files(m, self._entries(m, plain)).unionByName(folded)
         if system:
             return df
@@ -994,6 +951,8 @@ class SnapshotTable:
             keyed.groupBy(*key_cols)
             .agg(
                 F.max(order_col).alias(order_col),
+                # feeds only the summary's delete count; the merged
+                # state is resolved by compact_lww
                 F.max_by(is_del, F.col(order_col)).alias("__del"),
             )
             .persist()
@@ -1024,7 +983,6 @@ class SnapshotTable:
         order_col: str = "seq",
         evolve: bool = True,
         meta_cols: tuple[str, ...] = ("schema_ver",),
-        broadcast_max_keys: int = 4_000_000,
         prepared: PreparedMerge | None = None,
         mode: str = "cow",
         ordered_writer: bool = True,
@@ -1050,13 +1008,15 @@ class SnapshotTable:
         Exactly-once via epoch fencing; schema evolution applied before
         the data commit.
 
-        Assumptions (same contract as ``compact_lww``): ``order_col`` is a
-        batch-wide-unique LSN. Re-delivery of the winning event is fine
-        (collapses to one row); two *different* payloads sharing
-        (key, order) resolve by a nondeterministic ``max_by`` tie-break —
-        a malformed log, not a supported input. Winner filtering uses a
+        Ties (same contract as ``compact_lww``): re-delivery of the
+        winning event collapses to one row. A batch row whose
+        ``order_col`` equals the table row's ``_seq`` replaces it —
+        ``WHEN MATCHED AND src.seq >= tgt._seq`` — so a rewrite at the
+        original LSN (``IvfIndex.retrain_step``) lands deterministically;
+        two different batch rows sharing (key, order) resolve by
+        ``compact_lww``'s content order. Winner filtering uses a
         broadcast semi-join on the winner LSNs while the winner count
-        (≈8 bytes/key) is at most ``broadcast_max_keys``; above that it
+        (≈8 bytes/key) is at most ``_BROADCAST_MAX_KEYS``; above that it
         falls back to a keyed shuffle semi-join on (key, order), so a
         mis-configured giant epoch degrades to an extra shuffle instead
         of a driver OOM.
@@ -1153,7 +1113,7 @@ class SnapshotTable:
             # but correct under out-of-order epochs and event re-delivery
             # (a stale version can never overwrite a newer one).
             payload = [F.col(f.name) for f in table_schema.fields]
-            if rows_in <= broadcast_max_keys:
+            if rows_in <= _BROADCAST_MAX_KEYS:
                 seqs = winners.select(order_col)
                 survivors = aligned.join(F.broadcast(seqs), on=order_col, how="left_semi")
             else:
@@ -1173,23 +1133,17 @@ class SnapshotTable:
             affected_set = set(affected)
             batch_events = survivors.select(*payload, F.col(order_col), F.col(op_col))
 
-            def compact_route(staged_events: DataFrame) -> DataFrame:
+            def compact_route(
+                staged_events: DataFrame, order_cols: tuple[str, ...]
+            ) -> DataFrame:
                 # ONE exchange for compact+write (r8, guide §2.4): route
                 # rows to their bucket's write partition FIRST, then run
-                # the per-key LWW fold with the routing columns added to
-                # the grouping keys — they are pure functions of the
-                # bucket column, so the groups are unchanged and the
-                # aggregate's clustering requirement is satisfied by the
-                # routing partitioning (no second exchange; previously
-                # the fold shuffled by key and the write re-shuffled by
-                # bucket, moving the staged payload twice).
+                # compact_lww's routed form — the routing columns are
+                # pure functions of the bucket column, so the groups are
+                # unchanged and the routing partitioning satisfies the
+                # fold's clustering: the staged payload moves once.
                 routed, route_cols = self._route_for_write(staged_events, m)
-                folded = compact_lww(
-                    routed,
-                    (*route_cols, *key_cols),
-                    order_col,
-                    broadcast_winner_seqs="sort",
-                )
+                folded = compact_lww(routed, tuple(key_cols), order_cols, route_cols)
                 return folded.select(
                     *payload,
                     F.col(order_col).cast("long").alias(_SEQ),
@@ -1204,7 +1158,9 @@ class SnapshotTable:
                 # sort compact over ∝|keys| rows); they are written as
                 # delta segments, deletes persisting as tombstone rows.
                 # Bytes written ∝ |batch|, not touched-bucket bytes.
-                new_files = self._write_data(compact_route(batch_events), m, pre_routed=True)
+                new_files = self._write_data(
+                    compact_route(batch_events, (order_col,)), m, pre_routed=True
+                )
                 new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
                 bytes_written = sum(int(r["bytes"]) for r in new_segs.values())
 
@@ -1277,13 +1233,18 @@ class SnapshotTable:
                     *payload,
                     F.col(_SEQ).alias(order_col),
                     F.when(F.col(_DELETED), F.lit("delete")).otherwise(F.lit("update")).alias(op_col),
+                    F.lit(0).alias("__src"),
                 )
-                # staged rows ∝ |keys| → the sort-based single-shuffle compact
-                # is cheapest here (one job, no broadcast round-trip), and the
-                # whole union→compact→bucket-write pipeline runs as one job
-                # sharing ONE exchange (see compact_route)
-                staged = existing_events.unionByName(batch_events)
-                new_files = self._write_data(compact_route(staged), m, pre_routed=True)
+                # staged rows ∝ |keys|; the whole union→compact→bucket-write
+                # pipeline runs as one job sharing ONE exchange (see
+                # compact_route). Folding on (seq, __src) makes a batch row
+                # beat a table row at the same seq (src.seq >= tgt._seq).
+                staged = existing_events.unionByName(
+                    batch_events.withColumn("__src", F.lit(1))
+                )
+                new_files = self._write_data(
+                    compact_route(staged, (order_col, "__src")), m, pre_routed=True
+                )
                 # segment files for the touched buckets are written ONCE, up
                 # front; a rebase-retry re-points the same immutable segments
                 # (validate() guarantees the base buckets didn't change).
@@ -1634,8 +1595,12 @@ class SnapshotTable:
         off the ingest path (size- or count-triggered, e.g.
         ``min_deltas=8``), exactly like Iceberg's rewrite_data_files.
         Conflict-safe: bucket tokens validate against concurrent ingest
-        (a racing merge or delta commit to a target bucket invalidates
-        this job, which yields — ingest always wins)."""
+        (a racing commit that rewrites a target bucket's base invalidates
+        this job, which yields — ingest always wins). Delta segments
+        appended to a target bucket after the fold read it stay on top
+        of the new base: LWW over base ∪ deltas is associative, so a
+        fold slower than the ingest cadence still commits instead of
+        losing every race."""
         m = self.manifest()
         sel = None if buckets is None else {int(b) for b in buckets}
         target = sorted(
@@ -1651,6 +1616,8 @@ class SnapshotTable:
         new_files = self._write_data(folded, m)
         new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
         base_tokens = {b: self._bucket_token(m, b) for b in target}
+        # per target bucket, the delta segments this fold consumed
+        consumed = {b: len(self._delta_refs(m)[str(b)]) for b in target}
 
         def build(cur: dict[str, Any]) -> dict[str, Any]:
             refs = {
@@ -1663,7 +1630,9 @@ class SnapshotTable:
             c.pop("files", None)
             c["segments"] = refs
             c["deltas"] = {
-                b: v for b, v in self._delta_refs(cur).items() if int(b) not in target_set
+                b: v[consumed.get(int(b), 0) :]
+                for b, v in self._delta_refs(cur).items()
+                if int(b) not in target_set or len(v) > consumed[int(b)]
             }
             c["version"] = cur["version"] + 1
             c["parent"] = cur["version"]
@@ -1676,7 +1645,8 @@ class SnapshotTable:
 
         def validate(cur: dict[str, Any]) -> None:
             for b in target:
-                if self._bucket_token(cur, b) != base_tokens[b]:
+                folded = self._delta_refs(cur).get(str(b), [])[: consumed[b]]
+                if self._bucket_token({**cur, "deltas": {str(b): folded}}, b) != base_tokens[b]:
                     raise CommitConflictError(
                         f"bucket {b} changed under compact_deltas on {self.path}"
                     )

@@ -1,92 +1,91 @@
-"""Last-writer-wins compaction of a change-event batch.
+"""Last-writer-wins (LWW) compaction: the engine's one LWW kernel.
 
 This is the engine's core window op (SURVEY.md §2.5 W5): the reference's
 ``GraphAggregate.AddNode`` overwrites the properties of an existing node
 with the same ``(Type, id)`` — arrival-order last-writer-wins
 (``internal/domain/aggregates/graph/graph_aggregate.go:46-59``). Our keys
 are ``(conv_id, turn_idx)`` and "arrival order" is the total order given
-by ``seq`` (the LSN), tie-broken deterministically.
+by ``seq`` (the LSN). It is also a *hard requirement* of MERGE: a source
+with two rows matching one target key is ambiguous, so every batch is
+compacted to exactly one event per key first.
 
-It is also a *hard requirement* of MERGE semantics, not an optimization:
-a MERGE source with two rows matching one target key is ambiguous
-(Iceberg/Delta raise; our snapshot format would silently duplicate), so
-every batch is compacted to exactly one event per key first.
+Every LWW resolution goes through :func:`compact_lww`: ``final_state``,
+both levels of ``skew.compact_lww_salted``, the merge-on-read read fold
+and the MERGE's compact+write (``lake/snapshot_table.py``). Replaying an
+epoch must rebuild the same state (epoch fencing assumes deterministic
+recomputation, as in D-Streams), so ties never resolve by arrival order:
+rows tied on the ``order_cols`` tuple rank by their other columns,
+greatest first (map columns are not orderable and are skipped), and
+byte-identical re-deliveries collapse to one row.
 
-Scale note — why NOT ``max_by(struct(payload))`` or a row_number window:
-both carry the full payload through the aggregation. A struct with
-string fields is not a fixed-width aggregation buffer, so Catalyst
-compiles that to **SortAggregate** — every map task fully sorts its
-partition, and so does the reduce side; a window does the same and also
-forgoes partial aggregation. Measured on a 32-core box this capped
-compaction at ~3M events/s regardless of parallelism. The form here
-keeps everything hash-based:
-
-1. ``max(order)`` per key — fixed-width buffer → HashAggregateExec with
-   map-side partial aggregation (an update storm on a hot key collapses
-   locally before the shuffle), shuffling only (key, long) rows;
-2. join the winners back (AQE picks a shuffled-hash join; the payload is
-   shuffled once, never sorted);
-3. a thin ``max_by`` pass over the ~|keys| surviving rows — only to
-   collapse byte-identical duplicate deliveries of the winning event
-   (same ``seq`` twice) — which reuses the join's partitioning, so it
-   adds no exchange, and its sort sees |keys| rows, not |events|.
+Scale note: ``max_by(struct(payload))`` carries a variable-width buffer,
+so Catalyst compiles it to **SortAggregate**, and a window over the raw
+batch sorts every version and forgoes partial aggregation. The raw form
+here takes ``max(order_cols[0])`` per key (fixed-width HashAggregate,
+map-side combined), keeps the rows at that max with a null-safe keyed
+semi-join, and ranks only those ~|keys| survivors with ``row_number``.
+The routed form (``route_cols`` given) is for rows the caller already
+hash-partitioned on ``route_cols``, functions of the key such as the
+MERGE's bucket routing: the input is already ∝ |keys| and that
+partitioning satisfies the ranking's grouping, so it adds no exchange.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 KEY_COLS = ("conv_id", "turn_idx")
 META_COLS = ("seq", "op")
 
 
+def _orderable(dt: T.DataType) -> bool:
+    """False if the type tree contains a map anywhere (Spark cannot
+    compare, sort or group on a map, nested or not)."""
+    if isinstance(dt, T.MapType):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
+
+
 def compact_lww(
-    batch: DataFrame,
+    rows: DataFrame,
     key_cols: tuple[str, ...] = KEY_COLS,
-    order_col: str = "seq",
-    broadcast_winner_seqs: bool | str = True,
+    order_cols: tuple[str, ...] = ("seq",),
+    route_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Reduce a change batch to the single winning event per key.
-
-    Output schema = input schema; exactly one row per key — the event with
-    the greatest ``order_col``. Deletes survive compaction as rows with
-    ``op='delete'`` (the MERGE arm decides to drop them); a delete followed
-    by a later re-insert within one batch correctly resolves to the insert.
-    Duplicate delivery of the winning event (same key, same ``order_col``)
-    collapses to one row.
-
-    ``broadcast_winner_seqs``: because ``order_col`` is an LSN — globally
-    unique across keys — the winning rows are exactly the rows whose
-    ``order_col`` is in the (narrow) winner set, so the payload can be
-    filtered by a **broadcast semi-join on the longs alone** and never
-    shuffles at this stage at all. One epoch's winner set is bounded by
-    the trigger's backpressure cap (~8 bytes/key); pass False for
-    unbounded batches and the filter becomes a keyed shuffle join.
-    """
-    keys = list(key_cols)
-    payload = [c for c in batch.columns if c not in key_cols]
-    if broadcast_winner_seqs == "sort":
-        # single-shuffle sort-based form: right call when the input is
-        # already ∝ |keys| (e.g. the in-merge staged union) — one job, no
-        # driver broadcast round-trip; never use on a raw event batch
-        # (SortAggregate would sort the full payload on every partition)
-        winner = F.max_by(F.struct(*payload), F.col(order_col)).alias("_w")
-        compacted = batch.groupBy(*keys).agg(winner)
-        return compacted.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in payload])
-    winners = batch.groupBy(*keys).agg(F.max(order_col).alias("__max_ord"))
-    if broadcast_winner_seqs:
-        seqs = winners.select(F.col("__max_ord").alias(order_col))
-        survivors = batch.join(F.broadcast(seqs), on=order_col, how="left_semi")
-    else:
-        survivors = (
-            batch.join(winners, on=keys)
-            .where(F.col(order_col) == F.col("__max_ord"))
-            .drop("__max_ord")
-        )
-    winner = F.max_by(F.struct(*payload), F.col(order_col)).alias("_w")
-    compacted = survivors.groupBy(*keys).agg(winner)
-    return compacted.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in payload])
+    """Reduce ``rows`` to one row per key (null-safe key equality): the
+    greatest fixed-width ``order_cols`` tuple wins, ties rank by the
+    other orderable columns. Output schema = input schema. Deletes
+    survive as ``op='delete'`` rows (the MERGE arm drops them).
+    ``route_cols``: ``rows`` are already hash-partitioned on these
+    functions of the key; the fold then adds no exchange."""
+    group = [*route_cols, *key_cols]
+    if not route_cols:
+        top = order_cols[0]
+        winners = rows.groupBy(*key_cols).agg(F.max(top).alias("__top")).alias("__w")
+        r = rows.alias("__r")
+        cond = F.col(f"__r.{top}") == F.col("__w.__top")
+        for k in key_cols:
+            cond = cond & F.col(f"__r.{k}").eqNullSafe(F.col(f"__w.{k}"))
+        rows = r.join(winners, cond, "left_semi")
+    rest = [
+        f.name
+        for f in rows.schema.fields
+        if f.name not in group and f.name not in order_cols and _orderable(f.dataType)
+    ]
+    rank = Window.partitionBy(*group).orderBy(
+        *[F.col(c).desc() for c in (*order_cols, *rest)]
+    )
+    return (
+        rows.withColumn("__rn", F.row_number().over(rank))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def final_state(
@@ -103,7 +102,7 @@ def final_state(
     per key, the payload of the max-seq event, excluding keys whose max-seq
     event is a delete (FIXTURES.md §5).
     """
-    compacted = compact_lww(log, key_cols, order_col)
+    compacted = compact_lww(log, key_cols, (order_col,))
     live = compacted.filter(F.col("op") != F.lit("delete"))
     if payload_cols is None:
         payload_cols = tuple(c for c in log.columns if c not in key_cols and c not in META_COLS)

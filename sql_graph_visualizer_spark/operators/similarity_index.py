@@ -407,11 +407,19 @@ class IvfIndex:
             if new_centroids is None:
                 raise ValueError("no retrain active and no new_centroids given")
             self.retrain_begin(new_centroids)
-        steps = 0
+        steps, last = 0, None
         while True:
             backlog = self.retrain_remaining()
             if not backlog:
                 break
+            if backlog == last:
+                # ingest never adds old-generation rows, so a committed
+                # step that migrated nothing would repeat forever
+                raise RuntimeError(
+                    f"retrain made no progress: cells {backlog[:10]} still hold "
+                    f"generation {self.generation} rows after a committed step"
+                )
+            last = backlog
             chunk = backlog[:cells_per_step]
             for attempt in range(max_conflict_retries + 1):
                 try:

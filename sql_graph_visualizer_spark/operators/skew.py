@@ -18,10 +18,12 @@ Two levers here:
    column (a groupBy count, map-side combined, tiny result).
 2. ``salted_repartition`` — spread rows of hot keys across
    ``salt_factor`` sub-partitions before per-key work. Correct for the
-   LWW compaction because ``compact_lww`` is an algebraic aggregation
-   (``max_by`` is associative/commutative): compacting salted
-   sub-groups then re-compacting per key yields the same winner. That
-   two-level compaction is exposed as ``compact_lww_salted``.
+   LWW compaction because ``compact_lww`` picks the maximum of one total
+   order per key (``order_cols``, then the row's other orderable
+   columns), and a maximum of sub-group maxima is the maximum: compacting
+   salted sub-groups then re-compacting per key yields the same winner,
+   ties included. That two-level compaction is exposed as
+   ``compact_lww_salted``.
 
 At the 100 TB design point the compaction itself already does map-side
 partial aggregation (see operators/compaction.py), so salting matters
@@ -74,7 +76,7 @@ def compact_lww_salted(
     if hot_keys is None:
         hot_keys = detect_hot_keys(batch, key_cols[0], hot_threshold)
     if not hot_keys:
-        return compact_lww(batch, key_cols, order_col)
+        return compact_lww(batch, key_cols, (order_col,))
     salted = with_salt(batch, key_cols[0], hot_keys, salt_factor)
-    level1 = compact_lww(salted, (*key_cols, "__salt"), order_col).drop("__salt")
-    return compact_lww(level1, key_cols, order_col)
+    level1 = compact_lww(salted, (*key_cols, "__salt"), (order_col,)).drop("__salt")
+    return compact_lww(level1, key_cols, (order_col,))

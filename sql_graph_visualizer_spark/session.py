@@ -21,6 +21,50 @@ import os
 from pyspark.sql import SparkSession
 
 
+def session_conf(master: str, shuffle_partitions: int) -> dict[str, str]:
+    """The Spark conf ``get_spark`` builds the session from."""
+    conf = {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # the engine's hot joins (LWW winners→payload, edges→nodes) are
+        # equi-joins where a sort buys nothing: prefer shuffled-hash so
+        # the payload is never sorted (SMJ would sort both sides)
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.compression.codec": "zstd",
+        # the engine's caches are short-lived scratch (a replay's source
+        # log, signature frames) on fast local dirs: columnar cache
+        # compression costs ~2x on build for bytes nobody keeps
+        # (measured: 8M-event log cache build 6.9s compressed vs 4.8s
+        # raw; DISK_ONLY 5.3 vs 3.4). Flip per-session for long-lived
+        # memory-resident caches on storage-tight clusters.
+        "spark.sql.inMemoryColumnarStorage.compressed": "false",
+        # deterministic float/timestamp behaviour for the oracle compare
+        "spark.sql.parquet.datetimeRebaseModeInWrite": "CORRECTED",
+        "spark.sql.parquet.int96RebaseModeInWrite": "CORRECTED",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        # throughput-batch engine: ParallelGC sustains allocation-heavy
+        # scan/parse work far better than G1 at high thread counts
+        # (measured 2x on 32-core JSON ingest; G1 young-gen handling was
+        # the JVM bottleneck)
+        "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
+        "spark.executor.extraJavaOptions": "-XX:+UseParallelGC",
+        "spark.ui.enabled": "false",
+    }
+    if master.startswith("local"):
+        # single-box topologies (local[N] and local-cluster) have no
+        # remote reads worth waiting for, but cached/disk blocks pin task
+        # preferences to executors — with two jobs sharing the executors
+        # (the replay pipelines epoch N+1's prepare under epoch N's
+        # write) the default 3s locality wait serializes them in
+        # multi-second stalls. Multi-node masters keep Spark's default.
+        conf["spark.locality.wait"] = "0"
+    return conf
+
+
 def get_spark(
     app_name: str = "sql-graph-visualizer-spark",
     master: str | None = None,
@@ -42,48 +86,7 @@ def get_spark(
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
         shuffle_partitions = int(inner) if inner.isdigit() else cpus
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # the engine's hot joins (LWW winners→payload, edges→nodes) are
-        # equi-joins where a sort buys nothing: prefer shuffled-hash so
-        # the payload is never sorted (SMJ would sort both sides)
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        # the engine's caches are short-lived scratch (a replay's source
-        # log, signature frames) on fast local dirs: columnar cache
-        # compression costs ~2x on build for bytes nobody keeps
-        # (measured: 8M-event log cache build 6.9s compressed vs 4.8s
-        # raw; DISK_ONLY 5.3 vs 3.4). Flip per-session for long-lived
-        # memory-resident caches on storage-tight clusters.
-        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-        # single-box topologies (local[N] and the bench's local-cluster)
-        # have no remote reads worth waiting for, but cached/disk blocks
-        # pin task preferences to executors — with two jobs sharing the
-        # executors (the replay pipelines epoch N+1's prepare under
-        # epoch N's write) the default 3s locality wait serializes them
-        # in multi-second stalls. On a real multi-node cluster set this
-        # per-job via spark-submit conf.
-        .config("spark.locality.wait", os.environ.get("SPARK_GRAFT_LOCALITY_WAIT", "0"))
-        # deterministic float/timestamp behaviour for the oracle compare
-        .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-        .config("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # throughput-batch engine: ParallelGC sustains allocation-heavy
-        # scan/parse work far better than G1 at high thread counts
-        # (measured 2x on 32-core JSON ingest; G1 young-gen handling was
-        # the JVM bottleneck)
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in {**session_conf(master, shuffle_partitions), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-

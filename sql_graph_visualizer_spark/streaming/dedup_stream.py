@@ -36,9 +36,12 @@ documents into a corpus SnapshotTable, records intra-batch pairs,
 retires stale pairs of re-ingested documents, and tombstones the
 duplicate-cluster losers via
 :func:`~sql_graph_visualizer_spark.operators.dedup_apply.apply_survivors`
-— so ``read_corpus()`` returns the deduplicated live set directly,
-and replaying the stream incrementally converges to the same final
-state as one one-shot dedup pass over everything (tested). The extra
+— so ``read_corpus()`` returns the deduplicated live set directly.
+Tested: one fixed corpus replayed in three epochs (duplicates across
+and within epochs, plus a singleton) ends with the same survivors as a
+one-shot dedup pass. Convergence in general is NOT shown: retiring
+stale pairs can split a duplicate component, and a member already
+tombstoned is not resurrected by that split. The extra
 per-epoch cost: a components pass over the PAIR graph (tiny vs the
 corpus) and two ∝-blast-radius merges.
 """

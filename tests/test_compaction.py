@@ -88,3 +88,50 @@ def test_generator_is_deterministic_across_partitionings(spark):
         a.groupBy("conv_id").count().orderBy(F.desc("count")).limit(1).collect()[0]["count"]
     )
     assert top > 2000 / 10  # above uniform share
+
+
+TIED = [(5, "update", "c", 0, "user", "A"), (5, "update", "c", 0, "user", "B")]
+
+
+def _tied(spark, order):
+    # one partition, rows in the given order: the arrival order is fixed
+    return _mk(spark, order).coalesce(1)
+
+
+def test_tie_winner_does_not_depend_on_arrival_order(spark):
+    """Two different rows at one (key, seq) resolve by content, not by
+    which one a task happens to see first."""
+    winners = {
+        compact_lww(_tied(spark, order)).collect()[0].text for order in (TIED, TIED[::-1])
+    }
+    assert winners == {"B"}
+
+
+def test_routed_tie_winner_does_not_depend_on_arrival_order(spark):
+    winners = set()
+    for order in (TIED, TIED[::-1]):
+        routed = _tied(spark, order).withColumn("__b", F.lit(0))
+        out = compact_lww(routed, route_cols=("__b",)).collect()
+        assert len(out) == 1
+        winners.add(out[0].text)
+    assert winners == {"B"}
+
+
+def test_tie_on_first_order_col_resolves_by_the_next(spark):
+    """``order_cols`` is a tuple: a tie on seq goes to the greater
+    second column before any payload column is looked at."""
+    rows = _mk(spark, TIED).withColumn("src", F.when(F.col("text") == "A", 1).otherwise(0))
+    out = compact_lww(rows, order_cols=("seq", "src")).collect()
+    assert [r.text for r in out] == ["A"]
+
+
+def test_routed_form_adds_no_exchange(spark):
+    """The MERGE's compact+write shape: rows hash-partitioned on a
+    routing column, then the routed fold — exactly one Exchange."""
+    log = gen_cdc_log(spark, 500, num_convs=5, turns_per_conv=5)
+    routed = log.withColumn("__p", F.pmod(F.hash("conv_id"), F.lit(4))).repartition(4, "__p")
+    plan = (
+        compact_lww(routed, route_cols=("__p",))._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("Exchange") == 1
+    assert "SortAggregate" not in plan

@@ -8,6 +8,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sql_graph_visualizer_spark.lake import snapshot_table
 from sql_graph_visualizer_spark.lake.snapshot_table import SnapshotTable
 from sql_graph_visualizer_spark.operators.compaction import final_state
 from sql_graph_visualizer_spark.sources.cdc_gen import gen_cdc_log
@@ -97,15 +98,49 @@ def test_merge_only_rewrites_touched_buckets(spark, tmp_path):
     assert len(rewritten) == 1
 
 
-def test_merge_broadcast_fallback_same_result(spark, tmp_path):
-    """Above broadcast_max_keys the winner filter degrades to a keyed
+def test_merge_broadcast_fallback_same_result(spark, tmp_path, monkeypatch):
+    """Above _BROADCAST_MAX_KEYS the winner filter degrades to a keyed
     shuffle semi-join — identical final state, no driver-side winner set."""
     log = gen_cdc_log(spark, 800, num_convs=8, turns_per_conv=6)
     t1, t2 = _table(spark, tmp_path, "a"), _table(spark, tmp_path, "b")
     t1.merge_upsert(log, epoch_id=0, query_id="q")
-    st = t2.merge_upsert(log, epoch_id=0, query_id="q", broadcast_max_keys=1)
+    monkeypatch.setattr(snapshot_table, "_BROADCAST_MAX_KEYS", 1)
+    st = t2.merge_upsert(log, epoch_id=0, query_id="q")
     assert st.rows_in > 1  # the fallback path actually ran
     assert _sorted_state(t1) == _sorted_state(t2)
+
+
+def test_cow_merge_batch_row_wins_tie_at_table_seq(spark, tmp_path):
+    """A batch row at the same seq as the table row replaces it
+    (``WHEN MATCHED AND src.seq >= tgt._seq``), whatever order the
+    staged rows arrive in — the shape ``IvfIndex.retrain_step`` writes
+    when it re-assigns a row at its original LSN."""
+    cols = "seq long, op string, conv_id string, turn_idx int, text string"
+    # the batch row sorts above, then below, the table row
+    for old, new in (("A", "B"), ("B", "A")):
+        t = _table(spark, tmp_path, f"tie{new}", buckets=1)
+        t.merge_upsert(
+            spark.createDataFrame([(5, "insert", "k", 0, old)], cols), epoch_id=0, query_id="q"
+        )
+        t.merge_upsert(
+            spark.createDataFrame([(5, "update", "k", 0, new)], cols), epoch_id=1, query_id="q"
+        )
+        assert _sorted_state(t) == [("k", 0, new)]
+
+
+def test_merge_of_tied_batch_rows_ignores_arrival_order(spark, tmp_path):
+    """Two different batch rows at one (key, seq) merge to the same row
+    whichever order the batch delivers them in, in both merge modes."""
+    cols = "seq long, op string, conv_id string, turn_idx int, text string"
+    rows = [(5, "update", "k", 0, "A"), (5, "update", "k", 0, "B")]
+    for mode in ("cow", "mor"):
+        got = set()
+        for i, order in enumerate((rows, rows[::-1])):
+            t = _table(spark, tmp_path, f"{mode}{i}", buckets=1)
+            batch = spark.createDataFrame(order, cols).coalesce(1)
+            t.merge_upsert(batch, epoch_id=0, query_id="q", mode=mode)
+            got.add(tuple(_sorted_state(t)))
+        assert got == {(("k", 0, "B"),)}, mode
 
 
 def test_size_stats_tracks_bytes(spark, tmp_path):
@@ -441,7 +476,7 @@ def test_lineage_shared_recorder_fences_per_query(spark, tmp_path):
     ]
 
 
-def test_merge_fallback_keeps_null_key_rows(spark, tmp_path):
+def test_merge_fallback_keeps_null_key_rows(spark, tmp_path, monkeypatch):
     """The size-guarded fallback semi-join must use null-safe key equality:
     a winner row with a NULL key column must survive identically on both
     paths — same batch, same merged state regardless of batch size
@@ -458,7 +493,8 @@ def test_merge_fallback_keeps_null_key_rows(spark, tmp_path):
     )
     t1, t2 = _table(spark, tmp_path, "bc"), _table(spark, tmp_path, "fb")
     t1.merge_upsert(mk(), epoch_id=0, query_id="q")
-    t2.merge_upsert(mk(), epoch_id=0, query_id="q", broadcast_max_keys=1)
+    monkeypatch.setattr(snapshot_table, "_BROADCAST_MAX_KEYS", 1)
+    t2.merge_upsert(mk(), epoch_id=0, query_id="q")
     s1, s2 = _sorted_state(t1), _sorted_state(t2)
     assert s1 == s2
     assert len(s1) == 3  # NULL-key rows kept on both paths

@@ -219,6 +219,36 @@ def test_retrain_protocol_guards(spark, tmp_path):
     assert idx.generation == 1
 
 
+def test_retrain_step_migrates_every_row_it_rewrites(spark, tmp_path):
+    """A retrain step rewrites each row at its ORIGINAL seq, so the
+    merge sees a tie on (vec_id, seq) between the table row and the
+    re-assigned one; the re-assigned row must win every time, or the
+    backlog never drains."""
+    emb = _clustered(spark).limit(64)
+    idx = IvfIndex.create(spark, str(tmp_path / "ix"), centroids=np.eye(8))
+    idx.add_batch(emb, epoch_id=0)
+    idx.retrain_begin(np.roll(np.eye(8), 3, axis=0))
+    idx.retrain_step(idx.retrain_remaining())
+    assert idx.retrain_remaining() == []
+
+
+def test_retrain_progressive_raises_when_a_step_makes_no_progress(spark, tmp_path, monkeypatch):
+    emb = _clustered(spark).limit(64)
+    idx = IvfIndex.create(spark, str(tmp_path / "ix"), centroids=np.eye(8))
+    idx.add_batch(emb, epoch_id=0)
+    idx.retrain_begin(np.roll(np.eye(8), 1, axis=0))
+    calls = []
+
+    def no_op_step(cells, query_id="ivf-retrain"):
+        calls.append(cells)
+        assert len(calls) < 3, "retrain_progressive kept looping on a no-op step"
+
+    monkeypatch.setattr(idx, "retrain_step", no_op_step)
+    with pytest.raises(RuntimeError, match="no progress"):
+        idx.retrain_progressive(cells_per_step=64)
+    assert len(calls) == 1
+
+
 # ------------------------------------------------- quantizer training
 
 
