@@ -24,10 +24,20 @@ instead of materializing the graph like the reference does.
 
 from __future__ import annotations
 
+import weakref
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _release(nodes: DataFrame) -> None:
+    """Unpersist a resolver's node snapshot. A no-op once its
+    SparkContext has stopped: the JVM side is gone, and unpersisting
+    through it raises."""
+    if nodes.sparkSession.sparkContext._jsc is None:
+        return
+    nodes.unpersist()
 
 
 def _node_shape(nodes: DataFrame) -> DataFrame:
@@ -61,11 +71,26 @@ class GraphQueryResolver:
     ``nodes``: (node_id, node_type, properties map<string,string>) —
     the shape ``plans/graph_builder.build_nodes`` produces and GraphSync
     maintains. ``edges``: (src, dst, rel_type[, properties]).
+
+    ``nodes`` is persisted (lazily) at construction: the first query
+    materializes it and every later query on this resolver answers from
+    that one snapshot, instead of re-running the node plan (for
+    ``build_transcript_graph``, a full merge-on-read read plus a
+    groupBy, a distinct and a three-rule union) per request. Build a
+    new resolver to see later commits; ``close()`` releases the
+    snapshot, as does garbage collection of the resolver.
     """
 
     def __init__(self, nodes: DataFrame, edges: DataFrame):
-        self.nodes = nodes
+        self.nodes = nodes.persist()
         self.edges = edges
+        self._finalizer = weakref.finalize(self, _release, self.nodes)
+        # the JVM may be gone by interpreter exit; nothing to free then
+        self._finalizer.atexit = False
+
+    def close(self) -> None:
+        """Release the node snapshot. Idempotent."""
+        self._finalizer()
 
     # ------------------------------------------------------------- Query
 
@@ -83,13 +108,10 @@ class GraphQueryResolver:
 
     def node(self, node_id: str) -> dict[str, Any] | None:
         """``node(id)`` point lookup (resolvers.go:110-141). Returns the
-        GraphQL model dict or None. On a SnapshotTable-backed graph the
-        scan under this filter is bucket-prunable by the id's hash."""
-        rows = (
-            _node_shape(self.nodes.filter(F.col("node_id") == F.lit(node_id)))
-            .limit(1)
-            .collect()
-        )
+        GraphQL model dict or None. Answered from the persisted node
+        snapshot in one job: a ``limit(1)`` would scan it partition by
+        partition, one job per step, for at most a few matching rows."""
+        rows = _node_shape(self.nodes.filter(F.col("node_id") == F.lit(node_id))).collect()
         return rows[0].asDict() if rows else None
 
     def relationships_by_type(self, rel_type: str) -> DataFrame:

@@ -273,8 +273,11 @@ class GraphQLServer:
         return self.port
 
     def stop(self) -> None:
-        """server.go:83-90 ``Stop``."""
-        self._http.shutdown()
-        self._http.server_close()
+        """server.go:83-90 ``Stop``. ``shutdown()`` waits for the serve
+        loop to exit, so it is called only if ``serve_background()``
+        started one; otherwise it would wait forever."""
         if self._thread is not None:
+            self._http.shutdown()
             self._thread.join(timeout=5)
+            self._thread = None
+        self._http.server_close()

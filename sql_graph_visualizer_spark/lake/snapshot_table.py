@@ -38,10 +38,10 @@ above it is backend-agnostic:
   (Iceberg v2 merge-on-read / Delta deletion-vector analogue, restated
   as LWW row deltas because this table's MERGE is pure LWW-by-LSN).
   Reads apply last-writer-wins over base ∪ deltas per key
-  (``operators.compaction.compact_lww``: fixed-width hash-agg winners,
-  one null-safe keyed semi-join, then the deterministic tie order over
-  the ~|keys| survivors) and skip that work entirely for buckets with no
-  deltas. ``compact_deltas()`` is the background
+  (``operators.compaction.compact_lww``'s routed form: one exchange
+  routes the delta-carrying buckets to one partition each, and every
+  version is ranked inside its bucket partition) and skip that work
+  entirely for buckets with no deltas. ``compact_deltas()`` is the background
   maintenance job that folds deltas back into the base (conflict-safe
   against concurrent ingest via the same bucket-token validation).
 - **Bucket-count evolution** (``rebucket``): ``num_buckets`` is chosen at
@@ -798,10 +798,12 @@ class SnapshotTable:
         last-writer-wins compaction over base ∪ deltas per key (max
         ``_seq`` wins; ties on ``_seq`` resolve by ``compact_lww``'s
         content order, so a re-delivered winner collapses to one row).
-        The fold is ``compact_lww``'s raw form — no SortAggregate; only
-        the ~|keys| rows at each key's max ``_seq`` are sorted — and is
-        skipped entirely when the selected buckets have no deltas, so a
-        fully-compacted table reads at plain scan speed."""
+        The fold (``_fold_deltas``) routes the delta-carrying buckets'
+        rows to one partition per bucket in a single exchange and sorts
+        every version of those buckets inside their bucket partition —
+        no SortAggregate, no second exchange. It is skipped entirely when
+        the selected buckets have no deltas, so a fully-compacted table
+        reads at plain scan speed."""
         m = manifest if manifest is not None else self.manifest(version)
         sel = None if buckets is None else {int(b) for b in buckets}
         delta_b = {
@@ -820,12 +822,7 @@ class SnapshotTable:
                 for b in seg_keys
                 if (sel is None or int(b) in sel) and int(b) not in delta_b
             ]
-            staged = self._read_files(
-                m,
-                self._entries(m, sorted(delta_b))
-                + self._delta_entries(m, sorted(delta_b)),
-            )
-            folded = compact_lww(staged, tuple(m["key_cols"]), (_SEQ,))
+            folded = self._fold_deltas(m, sorted(delta_b)).drop("__b")
             df = self._read_files(m, self._entries(m, plain)).unionByName(folded)
         if system:
             return df
@@ -833,11 +830,27 @@ class SnapshotTable:
 
     # -------------------------------------------------------------- writes
 
+    def _fold_deltas(self, m: dict[str, Any], buckets: list[int]) -> DataFrame:
+        """LWW-fold base ∪ deltas of ``buckets`` (each carries deltas) in
+        ONE exchange: the staged rows are routed to one partition per
+        bucket, then ``compact_lww``'s routed form ranks every version of
+        a key inside its bucket's partition. The output carries ``__b``
+        and is partitioned per bucket, ready for
+        ``_write_data(pre_routed=True)``."""
+        staged = self._read_files(
+            m, self._entries(m, buckets) + self._delta_entries(m, buckets)
+        )
+        routed, route_cols = self._route_for_write(staged, m, buckets)
+        return compact_lww(routed, tuple(m["key_cols"]), (_SEQ,), route_cols).drop("__p")
+
     def _route_for_write(
-        self, df: DataFrame, m: dict[str, Any]
+        self, df: DataFrame, m: dict[str, Any], buckets: list[int] | None = None
     ) -> tuple[DataFrame, tuple[str, ...]]:
         """Attach the bucket id and repartition rows into balanced
         per-bucket write partitions; returns ``(routed_df, route_cols)``.
+        ``buckets``: the rows come from these buckets only (sorted), so
+        route to exactly ``len(buckets)`` partitions; default: every
+        bucket id of the spec.
 
         r8 (guide §2.5): hash-repartitioning n distinct bucket ids into
         n partitions is the classic too-few-distinct-keys skew — ~1/e of
@@ -857,15 +870,19 @@ class SnapshotTable:
         # migration labels rewritten buckets under the NEW modulus)
         mig = m.get("migration")
         n = int(mig["new_num_buckets"]) if mig else int(m["num_buckets"])
+        ids = range(n) if buckets is None else buckets
         routed = df.withColumn("__b", self._bucket_expr(m))
         if n <= 65536:
-            toks = _partition_tokens(n)
+            # slot[b] = the token of bucket b's partition among `ids`
+            slot = [0] * n
+            for b, t in zip(ids, _partition_tokens(len(ids))):
+                slot[b] = t
             tok_col = F.element_at(
-                F.array(*[F.lit(t).cast("long") for t in toks]),
+                F.array(*[F.lit(t).cast("long") for t in slot]),
                 F.col("__b").cast("int") + 1,
             )
             return (
-                routed.withColumn("__p", tok_col).repartition(n, F.col("__p")),
+                routed.withColumn("__p", tok_col).repartition(len(ids), F.col("__p")),
                 ("__p", "__b"),
             )
         # token table impractical; accept hash collisions
@@ -1611,9 +1628,8 @@ class SnapshotTable:
         if not target:
             return {"buckets": 0, "version": int(m["version"])}
         target_set = set(target)
-        # read() folds base ∪ deltas for these buckets; tombstones kept
-        folded = self.read(buckets=target, manifest=m, system=True)
-        new_files = self._write_data(folded, m)
+        # tombstones kept; the fold's bucket partitions are the write's
+        new_files = self._write_data(self._fold_deltas(m, target), m, pre_routed=True)
         new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
         base_tokens = {b: self._bucket_token(m, b) for b in target}
         # per target bucket, the delta segments this fold consumed

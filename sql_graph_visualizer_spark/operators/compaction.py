@@ -26,8 +26,14 @@ map-side combined), keeps the rows at that max with a null-safe keyed
 semi-join, and ranks only those ~|keys| survivors with ``row_number``.
 The routed form (``route_cols`` given) is for rows the caller already
 hash-partitioned on ``route_cols``, functions of the key such as the
-MERGE's bucket routing: the input is already ∝ |keys| and that
-partitioning satisfies the ranking's grouping, so it adds no exchange.
+bucket routing of ``SnapshotTable``: that partitioning satisfies the
+ranking's grouping, so the fold adds no exchange of its own. The MERGE's
+compact+write routes its ~|keys| survivors this way. The merge-on-read
+fold (the read of delta-carrying buckets and ``compact_deltas``) routes
+base ∪ deltas to one partition per bucket and sorts every version of
+those buckets inside their bucket partition: one exchange in place of
+the raw form's two, with no max aggregate or semi-join, at the price of
+sorting every version rather than only the rows at each key's max.
 """
 
 from __future__ import annotations

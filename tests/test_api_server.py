@@ -6,6 +6,7 @@ with urllib like any reference client would."""
 from __future__ import annotations
 
 import json
+import threading
 import urllib.error
 import urllib.request
 
@@ -98,6 +99,20 @@ def test_server_stop_releases_port(spark):
     # a new server can bind the SAME port right away (clean shutdown)
     srv2 = GraphQLServer(_graph(spark), port=port)
     assert srv2.serve_background() == port
+    srv2.stop()
+
+
+def test_stop_without_serve_returns_promptly(spark):
+    """stop() on a server whose serve loop never started must not wait
+    for that loop (socketserver.shutdown() would wait forever)."""
+    srv = GraphQLServer(_graph(spark))
+    port = srv.port
+    t = threading.Thread(target=srv.stop, daemon=True)
+    t.start()
+    t.join(timeout=10)
+    assert not t.is_alive(), "stop() hung without serve_background()"
+    # the socket is closed: the port can be bound again
+    srv2 = GraphQLServer(_graph(spark), port=port)
     srv2.stop()
 
 

@@ -66,3 +66,13 @@ def test_edges_use_hash_join_not_nested_loop(spark):
     plan = edges._jdf.queryExecution().executedPlan().toString()
     assert "Join" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def test_edges_action_leaves_no_cache_entry(spark):
+    """build_edges computes the shared node pipeline through exchange
+    reuse, not a persist: building the graph and running an edges
+    action registers nothing in the CacheManager."""
+    spark.catalog.clearCache()
+    _, edges = build_transcript_graph(_transcripts(spark))
+    assert edges.count() == 9
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -12,6 +12,7 @@ a bigger bucket spec without breaking concurrent ingest.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -537,12 +538,17 @@ def test_async_fold_failure_surfaces_on_next_trigger(spark, tmp_path):
     assert t.delta_stats()["max_layers"] < 2
 
 
+def _exchanges(plan: str) -> list[str]:
+    """Exchange operators (shuffle or broadcast) of a plan string."""
+    return [ln for ln in plan.splitlines() if re.search(r"\b(Broadcast)?Exchange\b", ln)]
+
+
 def test_mor_read_plan_shape(spark, tmp_path):
-    """The MoR fold's plan contract at 100 TB: the payload shuffles on
-    the key columns (hash exchanges) and is NEVER sorted — no
-    SortAggregate (the variable-width-buffer trap), no nested loop, no
-    cartesian. Buckets without deltas must not appear under the fold's
-    aggregation at all (they union in above it)."""
+    """The MoR fold's plan contract at 100 TB: no SortAggregate (the
+    variable-width-buffer trap), no nested loop, no cartesian, and the
+    payload moves in exactly one exchange — the routing of the
+    delta-carrying buckets to their bucket partitions. Buckets without
+    deltas union in above the fold."""
     t = _table(spark, tmp_path, buckets=8)
     log = gen_cdc_log(spark, 800, num_convs=10, turns_per_conv=6)
     t.merge_upsert(log.filter("seq < 400"), epoch_id=0, query_id="q")
@@ -550,7 +556,53 @@ def test_mor_read_plan_shape(spark, tmp_path):
     plan = t.read()._jdf.queryExecution().executedPlan().toString()
     assert "SortAggregate" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    assert "HashAggregate" in plan  # winner max(_seq) per key is hash-based
+    assert len(_exchanges(plan)) == 1, plan
+
+
+def test_mor_fold_one_exchange_one_partition_per_delta_bucket(spark, tmp_path):
+    """The fold of a delta-carrying read is ONE exchange (the raw
+    compact_lww form pays two: the max(_seq) aggregate and the keyed
+    semi-join). It routes to exactly one partition per delta-carrying
+    bucket, so a bucket-pruned read runs no task for a bucket outside
+    ``buckets=``, and ``compact_deltas`` writes that routed output
+    without a second exchange."""
+    t = _table(spark, tmp_path, buckets=8)
+    log = gen_cdc_log(spark, 1200, num_convs=24, turns_per_conv=6)
+    t.merge_upsert(log.filter("seq < 800"), epoch_id=0, query_id="q")
+    hot = [f"conv-{i:06d}" for i in range(3)]
+    t.merge_upsert(
+        log.filter("seq >= 800").filter(F.col("conv_id").isin(hot)),
+        epoch_id=1, query_id="q", mode="mor",
+    )
+    m = t.manifest()
+    delta_b = sorted(int(b) for b in t._delta_refs(m))
+    assert 0 < len(delta_b) < 8
+    want = sorted(map(tuple, final_state(log.filter(
+        (F.col("seq") < 800) | F.col("conv_id").isin(hot)
+    )).select(*KEYS, "text").collect()))
+
+    plan = t.read(buckets=delta_b[:2])._jdf.queryExecution().executedPlan().toString()
+    assert len(_exchanges(plan)) == 1, plan
+    folded = t._fold_deltas(m, delta_b[:2])
+    per_part = folded.rdd.mapPartitions(lambda rows: [sorted({r["__b"] for r in rows})]).collect()
+    assert per_part == [[b] for b in delta_b[:2]]
+    assert sorted(map(tuple, t.read().select(*KEYS, "text").collect())) == want
+
+    # compact_deltas: fold + routed write, then no deltas and the same state
+    captured = []
+    orig = t._write_data
+
+    def spy(df, mm, pre_routed=False):
+        captured.append((df, pre_routed))
+        return orig(df, mm, pre_routed)
+
+    t._write_data = spy
+    assert t.compact_deltas()["buckets"] == len(delta_b)
+    df, pre_routed = captured[0]
+    assert pre_routed
+    assert len(_exchanges(df._jdf.queryExecution().executedPlan().toString())) == 1
+    assert not t._delta_refs(t.manifest())
+    assert sorted(map(tuple, t.read().select(*KEYS, "text").collect())) == want
 
 
 def test_graph_sync_over_mor_table(spark, tmp_path):
