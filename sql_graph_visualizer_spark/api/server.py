@@ -131,12 +131,15 @@ def _redact(obj: Any) -> Any:
 
 def _page(df: DataFrame, args: dict[str, Any]) -> list[dict[str, Any]]:
     """Collect a resolver DataFrame with limit/offset pushed into the
-    plan (never materialize the full graph per request)."""
+    plan (never materialize the full graph per request). Collected
+    through Arrow: without adaptive execution, ``collect()`` of a limit
+    runs Spark's incremental take, one job per step over more and more
+    partitions, where ``toArrow()`` runs the page as one job either way.
+    Every resolver column is a string, so the rows are the same."""
     offset = int(args.get("offset", 0))
     if offset:
         df = df.offset(offset)
-    df = df.limit(int(args.get("limit", 1000)))
-    return [r.asDict() for r in df.collect()]
+    return df.limit(int(args.get("limit", 1000))).toArrow().to_pylist()
 
 
 class GraphQLServer:

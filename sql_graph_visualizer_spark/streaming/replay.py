@@ -368,14 +368,17 @@ def replay_batch(
     The default (None) is SCALE-ADAPTIVE, decided from the replay's own
     LSN span (``bounds``/the min-max probe — no extra scan): persist
     while the log is at most ``SPARK_GRAFT_REPLAY_PERSIST_MAX_EVENTS``
-    (default 6M) events. Measured on the bench topologies: at 100k-8M
-    events the cache wins (interleaved A/B at 8M: 11.8 s vs 13.4 s
-    min-of-3); at 24M events in 6 GB executors the row→columnar build
-    cost (~13 s) exceeds everything it saves and the storage pressure
-    destabilises the executors — the big-log regime instead wants the
-    per-chunk lazy parse the source already provides. Pass True/False to
-    override either way; the cutoff is an env knob because the right
-    value depends on executor memory, not on the data. The cache lives
+    (default 6M) events. Measured on the bench topologies, whose
+    ``local-cluster[N,4,6144]`` masters size only the worker: the
+    executors ran with Spark's default 1 GB heap, so the 6M cutoff holds
+    for that heap. There, at 100k-8M events the cache wins (interleaved
+    A/B at 8M: 11.8 s vs 13.4 s min-of-3); at 24M events the
+    row→columnar build cost (~13 s) exceeds everything it saves and the
+    storage pressure destabilises the executors — the big-log regime
+    instead wants the per-chunk lazy parse the source already provides.
+    Pass True/False to override either way; the cutoff is an env knob
+    because the right value depends on executor memory, not on the
+    data. The cache lives
     only for this call (unpersisted in ``finally``) — nothing persists
     across bench/oracle invocations. A log the caller already persisted
     is left alone (no double persist, no surprise unpersist).

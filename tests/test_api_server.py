@@ -13,7 +13,7 @@ import urllib.request
 from sql_graph_visualizer_spark.api import GraphQueryResolver
 from sql_graph_visualizer_spark.api.server import GraphQLServer
 
-from tests.test_api_resolvers import _graph
+from tests.test_api_resolvers import _graph, _jobs
 
 
 def _post(port: int, payload: dict) -> dict:
@@ -114,6 +114,41 @@ def test_stop_without_serve_returns_promptly(spark):
     # the socket is closed: the port can be bound again
     srv2 = GraphQLServer(_graph(spark), port=port)
     srv2.stop()
+
+
+def test_page_runs_one_job(spark):
+    """A page is one Spark job, with adaptive execution on or off, also
+    when fewer rows match than the limit or an offset skips rows. Without
+    adaptive execution ``collect()`` of a limit runs Spark's incremental
+    take over the persisted snapshot's 8 partitions: one job per step
+    (1 partition, then 4, then the rest)."""
+    nodes = spark.createDataFrame(
+        [(f"User:{i}", "User", {"name": f"u{i}"}) for i in range(40)],
+        "node_id string, node_type string, properties map<string,string>",
+    ).repartition(8)
+    edges = spark.createDataFrame([], "src string, dst string, rel_type string")
+    resolver = GraphQueryResolver(nodes, edges)
+    srv = GraphQLServer(resolver)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        resolver.nodes.count()  # materialize the snapshot first
+        for enabled in ("false", "true"):
+            spark.conf.set("spark.sql.adaptive.enabled", enabled)
+            for query, n, match in (
+                ('{ searchNodes(query: "u3") { id } }', 11, "u3"),  # u3, u30..u39
+                ('{ nodesByType(type: "User", limit: 50, offset: 38) { id } }', 2, "u"),
+            ):
+                j0 = _jobs(spark)
+                rows = next(iter(srv.execute(query, {})["data"].values()))
+                assert _jobs(spark) - j0 == 1, (enabled, query)
+                assert len(rows) == n
+                for r in rows:
+                    name = "u" + r["id"].split(":")[1]
+                    assert match in name
+                    assert r == {"id": r["id"], "label": "User", "properties": f'{{"name":"{name}"}}'}
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        resolver.close()
 
 
 def _get(port: int, path: str) -> tuple[int, dict]:

@@ -4,7 +4,9 @@ schema evolution, snapshot expiry."""
 from __future__ import annotations
 
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -500,15 +502,13 @@ def test_merge_fallback_keeps_null_key_rows(spark, tmp_path, monkeypatch):
     assert len(s1) == 3  # NULL-key rows kept on both paths
 
 
-def test_legacy_inline_manifest_read_and_migrate(spark, tmp_path):
-    """A manifest written by the pre-segment format (inline per-bucket
-    ``files`` lists) stays readable, and the first write migrates it to
-    per-bucket segments without changing table contents."""
-    import json
-
+def test_legacy_inline_manifest_raises(spark, tmp_path):
+    """The pre-segment manifest shape (inline per-bucket ``files`` lists,
+    no ``segments``) is refused with a ValueError naming the table,
+    checked where the manifest is first read from disk."""
     t = _table(spark, tmp_path, buckets=4)
     log = gen_cdc_log(spark, 400, num_convs=5, turns_per_conv=6)
-    t.merge_upsert(log.filter(F.col("seq") < 200), epoch_id=0, query_id="q")
+    t.merge_upsert(log, epoch_id=0, query_id="q")
     # rewrite the current manifest into the legacy inline shape
     m = t.manifest()
     legacy = dict(m)
@@ -518,15 +518,50 @@ def test_legacy_inline_manifest_read_and_migrate(spark, tmp_path):
     legacy["parent"] = m["version"]
     t._write_manifest(legacy)
     t2 = SnapshotTable(spark, t.path)  # fresh instance, no caches
-    before = _sorted_state(t2)
-    assert len(before) > 0
-    assert t2.size_stats()["total_bytes"] > 0  # legacy stats path
-    st = t2.merge_upsert(log.filter(F.col("seq") >= 200), epoch_id=1, query_id="q")
-    assert not st.skipped
-    m2 = t2.manifest()
-    assert "segments" in m2 and "files" not in m2  # migrated
+    for op in (t2.manifest, t2.read, t2.size_stats):
+        with pytest.raises(ValueError, match=re.escape(t.path)):
+            op()
+
+
+def test_manifest_chain_and_epoch_fencing(spark, tmp_path):
+    """Every commit kind extends one version chain (``parent`` is the
+    previous version) and only fenced commits (``epoch_id >= 0``)
+    change ``epochs``."""
+    t = _table(spark, tmp_path, buckets=4)
+    log = gen_cdc_log(spark, 600, num_convs=6, turns_per_conv=6)
+    fenced = {
+        t.merge_upsert(log.filter("seq < 300"), epoch_id=0, query_id="q").snapshot_version,
+        t.merge_upsert(
+            log.filter("seq >= 300"), epoch_id=1, query_id="q", mode="mor"
+        ).snapshot_version,
+        t.merge_upsert(log.limit(0), epoch_id=2, query_id="q").snapshot_version,
+        t.append(t.read().limit(0), epoch_id=0, query_id="app"),
+    }
+    t.merge_upsert(log.limit(0))  # unfenced empty merge
+    t.compact_deltas()
+    t.rebucket(8)
+    t.expire_tombstones(older_than_seq=1 << 40, force=True)
+    t.advance_watermark("other", 10)
+    t.drop_watermark("other")
+    versions = t.versions()
+    assert versions == list(range(1, versions[-1] + 1))
+    ops = []
+    for v in versions[1:]:
+        m, p = t.manifest(v), t.manifest(v - 1)
+        assert m["parent"] == v - 1, v
+        ops.append(m["summary"]["operation"])
+        if v in fenced:
+            changed = {k for k in m["epochs"] if m["epochs"][k] != p["epochs"].get(k)}
+            assert len(changed) == 1, v
+        else:
+            assert m["epochs"] == p["epochs"], v
+    assert {
+        "merge", "append", "compact-deltas", "rebucket-start", "rebucket-step",
+        "rebucket-finish", "expire-tombstones", "advance-watermark", "drop-watermark",
+    } <= set(ops)
+    assert t.manifest()["num_buckets"] == 8
     expected = final_state(log, payload_cols=("text",))
-    got = t2.read().select("conv_id", "turn_idx", "text")
+    got = t.read().select("conv_id", "turn_idx", "text")
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
 
 

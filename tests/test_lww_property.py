@@ -2,7 +2,8 @@
 change log is delivered in, the table's final ``read()`` equals an
 independent DuckDB last-writer-wins recompute over the distinct events,
 for copy-on-write and merge-on-read tables alike, with a
-``compact_deltas`` at a drawn epoch boundary."""
+``compact_deltas`` and an optional ``rebucket`` to 2× or 4× the bucket
+count, each at a drawn epoch boundary."""
 
 from __future__ import annotations
 
@@ -42,7 +43,10 @@ def deliveries(draw):
     bounds = [0, *cuts, len(delivered)]
     epochs = [delivered[a:b] for a, b in zip(bounds, bounds[1:]) if a < b]
     compact_after = draw(st.integers(min_value=-1, max_value=len(epochs) - 1))
-    return events, epochs, compact_after
+    # 0: no rebucket; else after epoch (r - 1) // 2, to 2× (odd r) or 4×
+    r = draw(st.integers(min_value=0, max_value=2 * len(epochs)))
+    rebucket = ((r - 1) // 2, 2 if r % 2 else 4) if r else (-1, 1)
+    return events, epochs, compact_after, rebucket
 
 
 def _row(e):
@@ -80,7 +84,7 @@ def _oracle(events):
 )
 @given(deliveries())
 def test_final_read_equals_duckdb_lww_recompute(spark, case):
-    events, epochs, compact_after = case
+    events, epochs, compact_after, (rebucket_after, factor) = case
     expected = _oracle(events)
     root = tempfile.mkdtemp(prefix="lww_prop_")
     try:
@@ -91,6 +95,8 @@ def test_final_read_equals_duckdb_lww_recompute(spark, case):
                 t.merge_upsert(df, epoch_id=i, query_id="q", mode=mode, ordered_writer=False)
                 if i == compact_after:  # folds the deltas a MoR table holds so far
                     t.compact_deltas()
+                if i == rebucket_after:
+                    t.rebucket(2 * factor)
             got = sorted(
                 (tuple(r) for r in t.read().select("conv_id", "turn_idx", "text").collect()),
                 key=repr,

@@ -1,13 +1,14 @@
 """Progressive bucket-count migration (VERDICT r4 #1).
 
-The monolithic ``rebucket()`` rewrites the whole table in one commit
-that ANY concurrent commit invalidates — on a continuously-ingesting
-100 TB table the migration can never land (livelock) and the single
-rewrite is a stop-the-world-sized job anyway. The progressive form
-keeps both specs in the manifest (``migration: {new_num_buckets,
-frontier}``), migrates old buckets in small conflict-checked batches,
-and routes every reader/writer per key through the frontier CASE — so
-ingest never pauses and the migration converges bucket by bucket.
+A whole-table rewrite in one commit is invalidated by ANY concurrent
+commit — on a continuously-ingesting 100 TB table it can never land
+(livelock) and is a stop-the-world-sized job anyway. The progressive
+migration keeps both specs in the manifest (``migration:
+{new_num_buckets, frontier}``), migrates old buckets in small
+conflict-checked batches, and routes every reader/writer per key
+through the frontier CASE — so ingest never pauses and the migration
+converges bucket by bucket. ``rebucket()`` is this migration with every
+old bucket in one step; the "monolithic" comparisons below run it.
 Reference semantics preserved throughout: LWW by LSN
 (``graph_aggregate.go:46-59``), unchanged.
 """
@@ -81,6 +82,8 @@ def test_progressive_rebucket_requires_multiple(spark, tmp_path):
         t.rebucket_start(6)
     with pytest.raises(ValueError, match="multiple"):
         t.rebucket_start(4)
+    with pytest.raises(ValueError, match="multiple"):
+        t.rebucket(6)
 
 
 def test_step_yields_to_concurrent_ingest_and_retries(spark, tmp_path):
