@@ -84,7 +84,7 @@ import uuid
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -105,11 +105,6 @@ _DATA_DIR = "data"
 # micro-batches, and crash-replay re-delivers events.
 _SEQ = "_seq"
 _DELETED = "_deleted"
-
-# MERGE survivor pre-filter: broadcast the winner LSNs (≈8 bytes/key)
-# while an epoch has at most this many keys; above it, a keyed shuffle
-# semi-join (a giant epoch costs an extra shuffle, not a driver OOM)
-_BROADCAST_MAX_KEYS = 4_000_000
 
 
 def _refs_total_bytes(segments: dict[str, dict[str, Any]]) -> int:
@@ -248,8 +243,9 @@ class MergeStats:
     skipped: bool
     duration_ms: int
     snapshot_version: int
-    # phase breakdown (not persisted to lineage): winner-aggregation job
-    # vs merge-write job — the observability hook for scaling analysis
+    # phase breakdown (not persisted to lineage): the copy-on-write
+    # per-key prepare vs the merge write (merge-on-read has no prepare:
+    # stats_ms is 0) — the observability hook for scaling analysis
     stats_ms: int = 0
     write_ms: int = 0
     # data bytes this commit added (sum of its new data-file sizes) — the
@@ -283,12 +279,12 @@ class CommitConflictError(RuntimeError):
 
 @dataclass
 class PreparedMerge:
-    """Result of the winner-aggregation job (``merge_prepare``) — the
-    schema-independent half of a MERGE, computable before earlier epochs
-    have committed, which is what lets a replay pipeline epoch N+1's
-    aggregation under epoch N's write."""
+    """Result of the per-key pass (``merge_prepare``) — the
+    schema-independent half of a copy-on-write MERGE, computable before
+    earlier epochs have committed, which is what lets a replay pipeline
+    epoch N+1's pass under epoch N's write. It holds only the epoch's
+    figures (key count, deletes, touched buckets, max LSN), no rows."""
 
-    winners: DataFrame  # persisted: key_cols + order_col + __del
     rows_in: int
     deletes: int
     affected: list[int]
@@ -299,7 +295,7 @@ class PreparedMerge:
     # bucket spec the affected-bucket set was computed under; if a
     # rebucket step (a migration frontier advance or its finish)
     # commits between prepare and upsert, merge_upsert detects the
-    # mismatch and recomputes `affected` under the new routing instead
+    # mismatch and re-runs the prepare under the new routing instead
     # of pruning the wrong buckets
     num_buckets: int = 0
     spec_token: str = ""
@@ -936,14 +932,16 @@ class SnapshotTable:
         op_col: str = "op",
         order_col: str = "seq",
     ) -> PreparedMerge:
-        """The winner-aggregation half of MERGE: one column-pruned scan of
-        the batch (keys, order, op — fixed-width HashAggregate, map-side
-        combined), collecting per-key winners, delete counts and touched
-        buckets. Schema-INDEPENDENT: key/bucket columns never change type
-        under evolution, so this can run for epoch N+1 while epoch N's
-        write is still committing (pipelined replay). Caller passes the
-        result to ``merge_upsert(prepared=...)``, which owns the
-        unpersist."""
+        """The per-key half of a copy-on-write MERGE: one column-pruned
+        pass over the batch (keys, order, op — a fixed-width
+        HashAggregate, map-side combined) that learns the batch's key
+        count, delete count, max LSN and touched buckets. The per-key
+        rows are not kept: a no-op write runs the aggregate and an
+        ``Observation`` over its output carries the four figures back.
+        Schema-INDEPENDENT: key/bucket columns never change type under
+        evolution, so this can run for epoch N+1 while epoch N's write is
+        still committing (pipelined replay). Caller passes the result to
+        ``merge_upsert(prepared=...)``."""
         t0 = time.monotonic()
         m = self.manifest()
         key_cols = m["key_cols"]
@@ -955,7 +953,8 @@ class SnapshotTable:
             {k: F.col(k).cast(types[k]) for k in key_cols if k in types}
         )
         is_del = (F.col(op_col) == "delete").cast("int")
-        winners = (
+        obs = Observation()
+        (
             keyed.groupBy(*key_cols)
             .agg(
                 F.max(order_col).alias(order_col),
@@ -963,16 +962,17 @@ class SnapshotTable:
                 # state is resolved by compact_lww
                 F.max_by(is_del, F.col(order_col)).alias("__del"),
             )
-            .persist()
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum("__del").alias("d"),
+                F.max(order_col).alias("mx"),
+                F.collect_set(self._bucket_expr(m)).alias("bs"),
+            )
+            .write.format("noop").mode("overwrite").save()
         )
-        agg = winners.select(
-            F.count("*").alias("n"),
-            F.sum("__del").alias("d"),
-            F.max(order_col).alias("mx"),
-            F.collect_set(self._bucket_expr(m)).alias("bs"),
-        ).collect()[0]
+        agg = obs.get
         return PreparedMerge(
-            winners=winners,
             rows_in=int(agg["n"]),
             deletes=int(agg["d"] or 0),
             affected=sorted(int(b) for b in agg["bs"]),
@@ -1022,12 +1022,13 @@ class SnapshotTable:
         ``WHEN MATCHED AND src.seq >= tgt._seq`` — so a rewrite at the
         original LSN (``IvfIndex.retrain_step``) lands deterministically;
         two different batch rows sharing (key, order) resolve by
-        ``compact_lww``'s content order. Winner filtering uses a
-        broadcast semi-join on the winner LSNs while the winner count
-        (≈8 bytes/key) is at most ``_BROADCAST_MAX_KEYS``; above that it
-        falls back to a keyed shuffle semi-join on (key, order), so a
-        mis-configured giant epoch degrades to an extra shuffle instead
-        of a driver OOM.
+        ``compact_lww``'s content order.
+
+        ``prepared``: a copy-on-write ``merge_prepare`` result for this
+        batch (a pipelined replay computes it under the previous epoch's
+        write); it is computed here when absent or when the table's
+        bucket spec changed since. Merge-on-read ignores it: its stats
+        come from the one pass that writes the deltas.
 
         ``ordered_writer``: whether this writer promises its FUTURE
         epochs carry only LSNs above this batch's max (the normal shape
@@ -1040,8 +1041,6 @@ class SnapshotTable:
         t0 = time.monotonic()
         m = self.manifest()
         if epoch_id >= 0 and int(m["epochs"].get(query_id, -1)) >= epoch_id:
-            if prepared is not None:
-                prepared.winners.unpersist()
             return MergeStats(epoch_id, 0, 0, 0, 0, True, 0, m["version"])
         # base snapshot facts for optimistic-concurrency validation
         base_schema_id = m["schema_id"]
@@ -1053,283 +1052,263 @@ class SnapshotTable:
             m = self._evolve_if_needed(m, payload_schema)
         table_schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
         key_cols = m["key_cols"]
+        payload = [F.col(f.name) for f in table_schema.fields]
+        batch_events = align_to_schema(
+            batch, table_schema, keep_extra=[op_col, order_col]
+        ).select(*payload, F.col(order_col), F.col(op_col))
 
-        aligned = align_to_schema(batch, table_schema, keep_extra=[op_col, order_col])
+        def compact_route(
+            staged_events: DataFrame, order_cols: tuple[str, ...]
+        ) -> DataFrame:
+            # ONE exchange for compact+write (r8, guide §2.4): route
+            # rows to their bucket's write partition FIRST, then run
+            # compact_lww's routed form — the routing columns are
+            # pure functions of the bucket column, so the groups are
+            # unchanged and the routing partitioning satisfies the
+            # fold's clustering: the staged payload moves once.
+            routed, route_cols = self._route_for_write(staged_events, m)
+            folded = compact_lww(routed, tuple(key_cols), order_cols, route_cols)
+            return folded.select(
+                *payload,
+                F.col(order_col).cast("long").alias(_SEQ),
+                (F.col(op_col) == "delete").alias(_DELETED),
+                "__b",
+            )
 
-        # Scan discipline (the 10^10-event design point): the raw batch is
-        # scanned exactly TWICE — once column-pruned (keys, order, op) for
-        # the winner/stat aggregation (merge_prepare; overlappable with
-        # the previous epoch's write), once full-payload filtered by a
-        # semi-join on the winning LSNs. Everything after that is
-        # proportional to |keys|, not |events|. All aggregation buffers
-        # are fixed-width (long/int), so every agg is a HashAggregate with
-        # map-side partial aggregation — an update storm on a hot
-        # conversation collapses locally before the shuffle, which is why
-        # the default path needs no salting (operators/skew.py remains the
-        # explicit tool for payload-carrying skewed aggregations).
-        if prepared is None:
-            prepared = self.merge_prepare(batch, op_col=op_col, order_col=order_col)
-        winners = prepared.winners
-        rows_in, deletes = prepared.rows_in, prepared.deletes
-        affected = prepared.affected
-        prep_spec = prepared.spec_token or str(prepared.num_buckets)
-        if prepared.num_buckets and prep_spec != self._spec_token(m):
-            # a rebucket (or a progressive-migration frontier advance)
-            # committed between prepare and now: the prepared bucket set
-            # is numbered under the OLD routing — pruning with it would
-            # read the wrong buckets. Recompute from the persisted
-            # winners (∝ |keys|, one tiny agg job).
-            if rows_in > 0:
-                row = winners.select(
-                    F.collect_set(self._bucket_expr(m)).alias("bs")
-                ).collect()[0]
-                affected = sorted(int(b) for b in row["bs"])
-        base_tokens = {b: self._bucket_token(m, b) for b in affected}
+        # Scan discipline: each mode reads the raw batch's payload once,
+        # in the one routed exchange of compact_route; copy-on-write adds
+        # the column-pruned per-key pass of merge_prepare (overlappable
+        # with the previous epoch's write), because it must know the
+        # touched buckets before it reads them. That exchange carries
+        # every batch event, so an update storm on one hot key lands in
+        # one write task; the salted pre-compaction of operators/skew.py
+        # (replay's hot_threshold) is the tool for such batches.
         t_stats = time.monotonic()
-        try:
-            if rows_in == 0:
-                def build_empty(c: dict[str, Any]) -> None:
-                    c["summary"] = {
-                        "operation": "merge",
-                        "mode": mode,
-                        "epoch": epoch_id,
-                        "query_id": query_id,
-                        "rows": 0,
+        if mode == "mor":
+            # Merge-on-read: never read the base. The batch's per-key
+            # winners are written as delta segments, deletes persisting
+            # as tombstone rows; the epoch's stats are observed on the
+            # folded rows as they are written. Bytes written ∝ |batch|,
+            # not touched-bucket bytes.
+            obs = Observation()
+            folded = compact_route(batch_events, (order_col,)).observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col(_DELETED).cast("int")).alias("d"),
+                F.max(_SEQ).alias("mx"),
+            )
+            new_files = self._write_data(folded, m, pre_routed=True)
+            got = obs.get
+            rows_in, deletes = int(got["n"]), int(got["d"] or 0)
+            max_seq = int(got["mx"]) if got["mx"] is not None else -1
+            affected = sorted(int(b) for b in new_files)
+            stats_ms = 0
+        else:
+            if prepared is None or prepared.spec_token != self._spec_token(m):
+                # none given, or a rebucket (or a progressive-migration
+                # frontier advance) committed since it was prepared: its
+                # bucket set is numbered under the OLD routing — pruning
+                # with it would read the wrong buckets
+                prepared = self.merge_prepare(batch, op_col=op_col, order_col=order_col)
+                t_stats = time.monotonic()
+            rows_in, deletes = prepared.rows_in, prepared.deletes
+            max_seq, affected = prepared.max_seq, prepared.affected
+            stats_ms = prepared.stats_ms
+        if rows_in == 0:
+            def build_empty(c: dict[str, Any]) -> None:
+                c["summary"] = {
+                    "operation": "merge",
+                    "mode": mode,
+                    "epoch": epoch_id,
+                    "query_id": query_id,
+                    "rows": 0,
+                }
+
+            committed = self._commit_with_rebase(build_empty, epoch_id, query_id, m)
+            v = (committed or self.manifest())["version"]
+            return MergeStats(
+                epoch_id, 0, 0, 0, 0, committed is None,
+                int((time.monotonic() - t0) * 1000), v,
+            )
+
+        if mode == "mor":
+            new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
+            bytes_written = sum(int(r["bytes"]) for r in new_segs.values())
+
+            def build_mor(c: dict[str, Any]) -> None:
+                # delta commits commute: nothing was read, so a rebase
+                # just re-appends the same immutable delta refs onto
+                # whatever delta lists the new base carries; a racing
+                # COMPATIBLE schema evolution is absorbed by rebasing
+                # our schema onto the base's registry (see
+                # _rebase_schema_mor)
+                reg, sid, file_sid = self._rebase_schema_mor(c, m)
+                segs = new_segs
+                if file_sid != int(m["schema_id"]):
+                    segs = {
+                        b: self._retag_segment(ref, file_sid)
+                        for b, ref in new_segs.items()
                     }
+                dl = {b: list(v) for b, v in self._delta_refs(c).items()}
+                for b, ref in segs.items():
+                    dl.setdefault(b, []).append(ref)
+                c["schemas"] = reg
+                c["schema_id"] = sid
+                c["deltas"] = dl
+                _advance_watermark(c, query_id, max_seq, ordered_writer)
+                c["summary"] = {
+                    "operation": "merge",
+                    "mode": "mor",
+                    "epoch": epoch_id,
+                    "query_id": query_id,
+                    "rows": rows_in,
+                    "deletes": deletes,
+                    "buckets": len(affected),
+                    "bytes_written": bytes_written,
+                    "total_files_bytes": _refs_total_bytes(c["segments"]),
+                }
 
-                committed = self._commit_with_rebase(build_empty, epoch_id, query_id, m)
-                v = (committed or self.manifest())["version"]
-                return MergeStats(
-                    epoch_id, 0, 0, 0, 0, committed is None,
-                    int((time.monotonic() - t0) * 1000), v,
-                )
+            def validate_mor(cur: dict[str, Any]) -> None:
+                # no base rows were read, so concurrent data commits
+                # never invalidate a delta — a racing COMPATIBLE
+                # schema evolution is rebased in build_mor (an
+                # incompatible one raises there) — but a racing
+                # rebucket does: these delta files were
+                # hash-partitioned under OUR routing, and attaching
+                # their old-numbered bucket refs to the new layout
+                # would misplace every row for pruned reads. The ONE
+                # routing change that rebases instead of conflicting
+                # is a progressive-migration frontier advance that
+                # touches none of our buckets (their routing — and so
+                # our labels — is unchanged).
+                if self._spec_token(cur) != self._spec_token(m):
+                    if not self._frontier_advance_disjoint(m, cur, affected):
+                        raise CommitConflictError(
+                            f"concurrent rebucket on {self.path}"
+                        )
 
+            committed = self._commit_with_rebase(
+                build_mor, epoch_id, query_id, m, validate_mor
+            )
+        else:
+            affected_set = set(affected)
+            base_tokens = {b: self._bucket_token(m, b) for b in affected}
             # Versioned MERGE: re-express current rows (incl. persisted
             # tombstones) as change events carrying their committed _seq,
-            # union with the winning batch events, and let one LWW
-            # compaction pick the max-seq winner per key. Equivalent to
+            # union with the batch events, and let one LWW compaction
+            # pick the max-seq winner per key. Equivalent to
             #   WHEN MATCHED AND src.seq >= tgt._seq AND op='delete' THEN DELETE
             #   WHEN MATCHED AND src.seq >= tgt._seq THEN UPDATE
             #   WHEN NOT MATCHED AND op!='delete' THEN INSERT
             # but correct under out-of-order epochs and event re-delivery
             # (a stale version can never overwrite a newer one).
-            payload = [F.col(f.name) for f in table_schema.fields]
-            if rows_in <= _BROADCAST_MAX_KEYS:
-                seqs = winners.select(order_col)
-                survivors = aligned.join(F.broadcast(seqs), on=order_col, how="left_semi")
-            else:
-                # size-guarded fallback: winner set too large to broadcast —
-                # keyed shuffle semi-join on (key, order) instead (needs no
-                # LSN-uniqueness assumption either). Key equality must be
-                # null-safe: a winner row with a NULL key column would
-                # otherwise be dropped here while the broadcast path (which
-                # joins on order_col alone) keeps it — same batch, different
-                # merged state depending on batch size.
-                w = winners.select(*key_cols, order_col).alias("w")
-                a = aligned.alias("a")
-                cond = F.col(f"a.{order_col}") == F.col(f"w.{order_col}")
-                for k in key_cols:
-                    cond = cond & F.col(f"a.{k}").eqNullSafe(F.col(f"w.{k}"))
-                survivors = a.join(w, on=cond, how="left_semi")
-            affected_set = set(affected)
-            batch_events = survivors.select(*payload, F.col(order_col), F.col(op_col))
-
-            def compact_route(
-                staged_events: DataFrame, order_cols: tuple[str, ...]
-            ) -> DataFrame:
-                # ONE exchange for compact+write (r8, guide §2.4): route
-                # rows to their bucket's write partition FIRST, then run
-                # compact_lww's routed form — the routing columns are
-                # pure functions of the bucket column, so the groups are
-                # unchanged and the routing partitioning satisfies the
-                # fold's clustering: the staged payload moves once.
-                routed, route_cols = self._route_for_write(staged_events, m)
-                folded = compact_lww(routed, tuple(key_cols), order_cols, route_cols)
-                return folded.select(
-                    *payload,
-                    F.col(order_col).cast("long").alias(_SEQ),
-                    (F.col(op_col) == "delete").alias(_DELETED),
-                    "__b",
-                )
-
-            if mode == "mor":
-                # Merge-on-read: never read the base. The survivors are the
-                # batch's per-key winners (plus possible duplicate
-                # deliveries of the winning event — collapsed by the thin
-                # sort compact over ∝|keys| rows); they are written as
-                # delta segments, deletes persisting as tombstone rows.
-                # Bytes written ∝ |batch|, not touched-bucket bytes.
-                new_files = self._write_data(
-                    compact_route(batch_events, (order_col,)), m, pre_routed=True
-                )
-                new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
-                bytes_written = sum(int(r["bytes"]) for r in new_segs.values())
-
-                def build_mor(c: dict[str, Any]) -> None:
-                    # delta commits commute: nothing was read, so a rebase
-                    # just re-appends the same immutable delta refs onto
-                    # whatever delta lists the new base carries; a racing
-                    # COMPATIBLE schema evolution is absorbed by rebasing
-                    # our schema onto the base's registry (see
-                    # _rebase_schema_mor)
-                    reg, sid, file_sid = self._rebase_schema_mor(c, m)
-                    segs = new_segs
-                    if file_sid != int(m["schema_id"]):
-                        segs = {
-                            b: self._retag_segment(ref, file_sid)
-                            for b, ref in new_segs.items()
-                        }
-                    dl = {b: list(v) for b, v in self._delta_refs(c).items()}
-                    for b, ref in segs.items():
-                        dl.setdefault(b, []).append(ref)
-                    c["schemas"] = reg
-                    c["schema_id"] = sid
-                    c["deltas"] = dl
-                    _advance_watermark(c, query_id, prepared.max_seq, ordered_writer)
-                    c["summary"] = {
-                        "operation": "merge",
-                        "mode": "mor",
-                        "epoch": epoch_id,
-                        "query_id": query_id,
-                        "rows": rows_in,
-                        "deletes": deletes,
-                        "buckets": len(affected),
-                        "bytes_written": bytes_written,
-                        "total_files_bytes": _refs_total_bytes(c["segments"]),
-                    }
-
-                def validate_mor(cur: dict[str, Any]) -> None:
-                    # no base rows were read, so concurrent data commits
-                    # never invalidate a delta — a racing COMPATIBLE
-                    # schema evolution is rebased in build_mor (an
-                    # incompatible one raises there) — but a racing
-                    # rebucket does: these delta files were
-                    # hash-partitioned under OUR routing, and attaching
-                    # their old-numbered bucket refs to the new layout
-                    # would misplace every row for pruned reads. The ONE
-                    # routing change that rebases instead of conflicting
-                    # is a progressive-migration frontier advance that
-                    # touches none of our buckets (their routing — and so
-                    # our labels — is unchanged).
-                    if self._spec_token(cur) != self._spec_token(m):
-                        if not self._frontier_advance_disjoint(m, cur, affected):
-                            raise CommitConflictError(
-                                f"concurrent rebucket on {self.path}"
-                            )
-
-                committed = self._commit_with_rebase(
-                    build_mor, epoch_id, query_id, m, validate_mor
-                )
-            else:
-                existing = self.read(buckets=affected, manifest=m, system=True)
-                existing_events = existing.select(
-                    *payload,
-                    F.col(_SEQ).alias(order_col),
-                    F.when(F.col(_DELETED), F.lit("delete")).otherwise(F.lit("update")).alias(op_col),
-                    F.lit(0).alias("__src"),
-                )
-                # staged rows ∝ |keys|; the whole union→compact→bucket-write
-                # pipeline runs as one job sharing ONE exchange (see
-                # compact_route). Folding on (seq, __src) makes a batch row
-                # beat a table row at the same seq (src.seq >= tgt._seq).
-                staged = existing_events.unionByName(
-                    batch_events.withColumn("__src", F.lit(1))
-                )
-                new_files = self._write_data(
-                    compact_route(staged, (order_col, "__src")), m, pre_routed=True
-                )
-                # segment files for the touched buckets are written ONCE, up
-                # front; a rebase-retry re-points the same immutable segments
-                # (validate() guarantees the base buckets didn't change).
-                # Metadata bytes written per commit ∝ touched buckets.
-                new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
-                bytes_written = sum(int(r["bytes"]) for r in new_segs.values())
-
-                def build(c: dict[str, Any]) -> None:
-                    refs = {
-                        b: r
-                        for b, r in c["segments"].items()
-                        if int(b) not in affected_set
-                    }
-                    refs.update(new_segs)
-                    # carry our (possibly evolved) schema history; validate()
-                    # guarantees no concurrent evolution changed schema_id —
-                    # but a racing writer may GROW cur's registry without
-                    # changing schema_id (a MoR rebase allocating a local id
-                    # for a schema absent from the shared ancestry), so the
-                    # registries must be UNIONED, not overwritten: dropping
-                    # the base's entry would leave that writer's delta file
-                    # entries pointing at a missing schema id (VERDICT r5)
-                    c["schemas"] = _union_schema_registries(
-                        c["schemas"], m["schemas"], self.path
-                    )
-                    c["schema_id"] = m["schema_id"]
-                    c["segments"] = refs
-                    # the rewrite folded the touched buckets' deltas in
-                    c["deltas"] = {
-                        b: v
-                        for b, v in self._delta_refs(c).items()
-                        if int(b) not in affected_set
-                    }
-                    _advance_watermark(c, query_id, prepared.max_seq, ordered_writer)
-                    c["summary"] = {
-                        "operation": "merge",
-                        "mode": "cow",
-                        "epoch": epoch_id,
-                        "query_id": query_id,
-                        "rows": rows_in,
-                        "deletes": deletes,
-                        "buckets": len(affected),
-                        "bytes_written": bytes_written,
-                        "total_files_bytes": _refs_total_bytes(refs),
-                    }
-
-                def validate(cur: dict[str, Any]) -> None:
-                    # copy-on-write staleness check: our `existing` read and
-                    # schema resolution used the base snapshot — a concurrent
-                    # commit to the same buckets (or a schema change) means
-                    # this merge must be recomputed, not rebased. A racing
-                    # rebucket is checked explicitly: bucket tokens would
-                    # catch it for non-empty buckets, but an insert-only
-                    # epoch into previously-EMPTY buckets (token None on
-                    # both specs) would otherwise slip old-numbered
-                    # segments into the new layout.
-                    if cur["schema_id"] != base_schema_id:
-                        raise CommitConflictError(
-                            f"concurrent schema evolution on {self.path}"
-                        )
-                    if self._spec_token(cur) != self._spec_token(m):
-                        raise CommitConflictError(
-                            f"concurrent rebucket on {self.path}"
-                        )
-                    for b in affected:
-                        if self._bucket_token(cur, b) != base_tokens[b]:
-                            raise CommitConflictError(
-                                f"bucket {b} rewritten concurrently on {self.path}"
-                            )
-
-                committed = self._commit_with_rebase(build, epoch_id, query_id, m, validate)
-            if committed is None:  # another writer committed this epoch mid-race
-                return MergeStats(
-                    epoch_id, 0, 0, 0, 0, True,
-                    int((time.monotonic() - t0) * 1000), self.manifest()["version"],
-                )
-            return MergeStats(
-                epoch_id,
-                rows_in,
-                rows_in - deletes,
-                deletes,
-                len(affected),
-                False,
-                int((time.monotonic() - t0) * 1000),
-                committed["version"],
-                stats_ms=prepared.stats_ms,
-                write_ms=int((time.monotonic() - t_stats) * 1000),
-                bytes_written=bytes_written,
-                max_seq=prepared.max_seq,
+            existing = self.read(buckets=affected, manifest=m, system=True)
+            existing_events = existing.select(
+                *payload,
+                F.col(_SEQ).alias(order_col),
+                F.when(F.col(_DELETED), F.lit("delete")).otherwise(F.lit("update")).alias(op_col),
+                F.lit(0).alias("__src"),
             )
-        finally:
-            winners.unpersist()
+            # the whole union→compact→bucket-write pipeline runs as one
+            # job sharing ONE exchange (see compact_route). Folding on
+            # (seq, __src) makes a batch row beat a table row at the same
+            # seq (src.seq >= tgt._seq).
+            staged = existing_events.unionByName(
+                batch_events.withColumn("__src", F.lit(1))
+            )
+            new_files = self._write_data(
+                compact_route(staged, (order_col, "__src")), m, pre_routed=True
+            )
+            # segment files for the touched buckets are written ONCE, up
+            # front; a rebase-retry re-points the same immutable segments
+            # (validate() guarantees the base buckets didn't change).
+            # Metadata bytes written per commit ∝ touched buckets.
+            new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
+            bytes_written = sum(int(r["bytes"]) for r in new_segs.values())
+
+            def build(c: dict[str, Any]) -> None:
+                refs = {
+                    b: r
+                    for b, r in c["segments"].items()
+                    if int(b) not in affected_set
+                }
+                refs.update(new_segs)
+                # carry our (possibly evolved) schema history; validate()
+                # guarantees no concurrent evolution changed schema_id —
+                # but a racing writer may GROW cur's registry without
+                # changing schema_id (a MoR rebase allocating a local id
+                # for a schema absent from the shared ancestry), so the
+                # registries must be UNIONED, not overwritten: dropping
+                # the base's entry would leave that writer's delta file
+                # entries pointing at a missing schema id (VERDICT r5)
+                c["schemas"] = _union_schema_registries(
+                    c["schemas"], m["schemas"], self.path
+                )
+                c["schema_id"] = m["schema_id"]
+                c["segments"] = refs
+                # the rewrite folded the touched buckets' deltas in
+                c["deltas"] = {
+                    b: v
+                    for b, v in self._delta_refs(c).items()
+                    if int(b) not in affected_set
+                }
+                _advance_watermark(c, query_id, max_seq, ordered_writer)
+                c["summary"] = {
+                    "operation": "merge",
+                    "mode": "cow",
+                    "epoch": epoch_id,
+                    "query_id": query_id,
+                    "rows": rows_in,
+                    "deletes": deletes,
+                    "buckets": len(affected),
+                    "bytes_written": bytes_written,
+                    "total_files_bytes": _refs_total_bytes(refs),
+                }
+
+            def validate(cur: dict[str, Any]) -> None:
+                # copy-on-write staleness check: our `existing` read and
+                # schema resolution used the base snapshot — a concurrent
+                # commit to the same buckets (or a schema change) means
+                # this merge must be recomputed, not rebased. A racing
+                # rebucket is checked explicitly: bucket tokens would
+                # catch it for non-empty buckets, but an insert-only
+                # epoch into previously-EMPTY buckets (token None on
+                # both specs) would otherwise slip old-numbered
+                # segments into the new layout.
+                if cur["schema_id"] != base_schema_id:
+                    raise CommitConflictError(
+                        f"concurrent schema evolution on {self.path}"
+                    )
+                if self._spec_token(cur) != self._spec_token(m):
+                    raise CommitConflictError(
+                        f"concurrent rebucket on {self.path}"
+                    )
+                for b in affected:
+                    if self._bucket_token(cur, b) != base_tokens[b]:
+                        raise CommitConflictError(
+                            f"bucket {b} rewritten concurrently on {self.path}"
+                        )
+
+            committed = self._commit_with_rebase(build, epoch_id, query_id, m, validate)
+        if committed is None:  # another writer committed this epoch mid-race
+            return MergeStats(
+                epoch_id, 0, 0, 0, 0, True,
+                int((time.monotonic() - t0) * 1000), self.manifest()["version"],
+            )
+        return MergeStats(
+            epoch_id,
+            rows_in,
+            rows_in - deletes,
+            deletes,
+            len(affected),
+            False,
+            int((time.monotonic() - t0) * 1000),
+            committed["version"],
+            stats_ms=stats_ms,
+            write_ms=int((time.monotonic() - t_stats) * 1000),
+            bytes_written=bytes_written,
+            max_seq=max_seq,
+        )
 
     def append(self, df: DataFrame, epoch_id: int = -1, query_id: str = "default") -> int:
         """Append-only commit (used by the lineage/metrics table)."""

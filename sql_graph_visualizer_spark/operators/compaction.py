@@ -28,12 +28,13 @@ The routed form (``route_cols`` given) is for rows the caller already
 hash-partitioned on ``route_cols``, functions of the key such as the
 bucket routing of ``SnapshotTable``: that partitioning satisfies the
 ranking's grouping, so the fold adds no exchange of its own. The MERGE's
-compact+write routes its ~|keys| survivors this way. The merge-on-read
-fold (the read of delta-carrying buckets and ``compact_deltas``) routes
-base ∪ deltas to one partition per bucket and sorts every version of
-those buckets inside their bucket partition: one exchange in place of
-the raw form's two, with no max aggregate or semi-join, at the price of
-sorting every version rather than only the rows at each key's max.
+compact+write routes every batch event (and, copy-on-write, the touched
+buckets' rows) this way, so the one exchange its write needs also does
+the fold. The merge-on-read fold (the read of delta-carrying buckets and
+``compact_deltas``) routes base ∪ deltas to one partition per bucket the
+same way. Both pay one exchange in place of the raw form's two, with no
+max aggregate or semi-join, at the price of sorting every version rather
+than only the rows at each key's max.
 """
 
 from __future__ import annotations

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -204,12 +205,32 @@ def synthesize_wav(docs: DataFrame, id_col: str = "doc_id", rate: int = 8000) ->
     return ids.mapInPandas(run, WAV_SCHEMA)
 
 
+def _pcm_samples(frames: bytes, width: int) -> Any:
+    """Decode little-endian PCM frames of ``width`` bytes per sample to
+    int64 samples: 8-bit WAV is unsigned (offset 128), 16- and 32-bit are
+    signed, and 24-bit is packed 3-byte signed."""
+    import numpy as np
+
+    if width == 1:
+        return np.frombuffer(frames, dtype="u1").astype(np.int64) - 128
+    if width == 2:
+        return np.frombuffer(frames, dtype="<i2").astype(np.int64)
+    if width == 3:
+        b = np.frombuffer(frames, dtype="u1").reshape(-1, 3).astype(np.int64)
+        v = b[:, 0] | (b[:, 1] << 8) | (b[:, 2] << 16)
+        return np.where(v >= 1 << 23, v - (1 << 24), v)
+    if width == 4:
+        return np.frombuffer(frames, dtype="<i4").astype(np.int64)
+    raise ValueError(f"unsupported WAV sample width: {width} bytes")
+
+
 def decode_wav(media: DataFrame) -> DataFrame:
     """REAL audio decode (VERDICT r6 #7 — no stub): parse each RIFF/WAVE
     payload with the stdlib ``wave`` reader inside an Arrow
-    ``mapInPandas`` stage, materializing PCM16 samples via numpy and
-    reducing them to integer audit stats (``sum_abs``, ``max_amp`` —
-    integer so the SQL oracle is value-exact). Bytes cross into Python
+    ``mapInPandas`` stage, materializing its 8/16/24/32-bit PCM samples
+    (by the header's sample width) via numpy and reducing them to
+    integer audit stats (``sum_abs``, ``max_amp`` — integer so the SQL
+    oracle is value-exact). Bytes cross into Python
     once per Arrow batch, never per row at the Spark boundary; the
     per-file ``wave.open`` loop is the codec itself (exactly what
     PIL/pyav would be for images/video, which remain honestly stubbed
@@ -226,7 +247,7 @@ def decode_wav(media: DataFrame) -> DataFrame:
             for mid, blob in zip(pdf["media_id"], pdf["content"]):
                 with wave.open(io.BytesIO(blob), "rb") as w:
                     frames = w.readframes(w.getnframes())
-                    arr = np.frombuffer(frames, dtype="<i2").astype(np.int64)
+                    arr = _pcm_samples(frames, w.getsampwidth())
                     out["media_id"].append(int(mid))
                     out["sample_rate"].append(w.getframerate())
                     out["n_channels"].append(w.getnchannels())

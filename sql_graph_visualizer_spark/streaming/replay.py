@@ -67,7 +67,7 @@ def merge_with_retry(
                 mode=merge_mode, ordered_writer=ordered_writer,
             )
         except CommitConflictError:
-            prepared = None  # recompute winners against the new base
+            prepared = None  # re-run the prepare against the new base
             if attempt == conflict_retries:
                 raise
             # linear backoff so ingest doesn't lock-step with a periodic
@@ -214,11 +214,12 @@ def replay_stream(
             # redaction + online benchmark decontamination; counters
             # flow to the lineage table under <query_id>-transforms
             batch = transforms.apply(batch, int(epoch_id))
-        # merge_upsert's winner selection is a fixed-width hash aggregate
-        # (map-side combined), so hot-conversation update storms collapse
-        # before the shuffle and the default path needs no pre-compaction.
-        # Pass hot_threshold to opt into the explicit salted two-level
-        # pre-compaction (operators/skew.py) for pathological cases.
+        # merge_upsert routes every batch event through its one bucket
+        # exchange and folds per key inside the bucket's partition, so an
+        # update storm on one hot conversation lands in one write task.
+        # Pass hot_threshold to opt into the salted two-level
+        # pre-compaction (operators/skew.py), which collapses hot keys
+        # before that exchange.
         prepared = (
             compact_lww_salted(batch, hot_threshold=hot_threshold)
             if hot_threshold is not None
@@ -348,22 +349,23 @@ def replay_batch(
     ``bounds``: pass the known (lo, hi) LSN range (a binlog tail always
     knows it) to skip a full-log min/max scan.
 
-    ``pipeline``: overlap epoch N+1's winner-aggregation job
-    (``merge_prepare`` — schema-independent, so safe before N commits)
-    with epoch N's merge-write job. The two jobs share the executors, so
-    the win is utilization — the aggregation fills the scheduler gaps,
-    barrier waits and straggler tails of the write stage, which is
-    exactly the time a bigger cluster otherwise wastes. Commit order,
-    fencing and results are unchanged (winners are a pure function of
-    the chunk).
+    ``pipeline``: with ``merge_mode="cow"``, overlap epoch N+1's per-key
+    pass (``merge_prepare`` — schema-independent, so safe before N
+    commits) with epoch N's merge-write job. The two jobs share the
+    executors, so the win is utilization — the per-key pass fills the
+    scheduler gaps, barrier waits and straggler tails of the write
+    stage, which is exactly the time a bigger cluster otherwise wastes.
+    Commit order, fencing and results are unchanged (the prepared
+    figures are a pure function of the chunk). A merge-on-read merge is
+    one pass with no prepare, so there is nothing to overlap.
 
     ``persist_log`` (r8, guide §1.2/§5): cache the source log for the
-    duration of the replay. Every epoch scans the log twice (the
-    column-pruned winner aggregation in ``merge_prepare`` plus the
-    full-payload survivor filter), so an ``epochs``-epoch replay performs
-    ``2×epochs`` source scans — for a gzip-JSON binlog tail that is
-    ``2×epochs`` full decompress+parse passes. Caching turns that into
-    ONE parse + ``2×epochs`` cheap columnar-cache reads.
+    duration of the replay. A copy-on-write epoch scans its chunk twice
+    (the column-pruned per-key pass in ``merge_prepare`` plus the
+    full-payload merge), a merge-on-read epoch once, so an
+    ``epochs``-epoch replay performs up to ``2×epochs`` source scans —
+    for a gzip-JSON binlog tail, as many full decompress+parse passes.
+    Caching turns that into ONE parse + cheap columnar-cache reads.
 
     The default (None) is SCALE-ADAPTIVE, decided from the replay's own
     LSN span (``bounds``/the min-max probe — no extra scan): persist
@@ -462,6 +464,7 @@ def replay_batch(
         else None
     )
     try:
+        pipeline = pipeline and merge_mode == "cow"
         with ThreadPoolExecutor(max_workers=1) as pool:
             nxt = None
             if pipeline:

@@ -18,7 +18,8 @@ with a documented column mapping:
     skipped   = False; snapshot_version = -1 (no commit of its own)
 
 Scale notes: redaction is pure ``regexp_replace`` codegen (zero UDFs);
-the counter pass is ONE map-side aggregate over the batch. Decontam
+the counters are an ``Observation`` on the batch, collected by the
+count that materializes the transformed frame (no pass of their own). Decontam
 keeps the broadcast-benchmark shape of the batch operator — the corpus
 (batch) text never shuffles; only (row, gram) pairs for the per-row
 distinct do, and that is what any exact per-row set metric costs.
@@ -28,7 +29,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from sql_graph_visualizer_spark.lake.snapshot_table import MergeStats
@@ -73,48 +74,47 @@ class IngestTransforms:
     def apply(self, batch: DataFrame, epoch_id: int) -> DataFrame:
         """Transform one micro-batch; counters land in ``self.stats``.
 
-        Cost discipline (r8, VERDICT r7 #2 / guide §5): the incoming
-        batch is persisted for the duration of this call, the row and
-        PII counters collapse into ONE aggregate job, and the returned
-        frame is itself persisted+materialized — so the downstream
-        consumers (winner aggregation, survivor filter, signature
-        builders) read the transformed rows from cache instead of each
-        re-running the redaction rewrite and the decontam anti-join.
-        Previously: three driver actions per epoch and a transform chain
-        recomputed by every consumer (~3-4× the transform cost at
-        scale). The caller owns the returned frame's unpersist after the
-        sink commits (``replay_stream`` does); the input persist is
-        released here."""
+        Cost discipline (r8, VERDICT r7 #2 / guide §5): the returned
+        frame is persisted and materialized by ONE driver action, so the
+        downstream consumers (the MERGE, signature builders) read the
+        transformed rows from cache instead of each re-running the
+        redaction rewrite and the decontam anti-join. The raw counters
+        (rows, PII matches) ride an ``Observation`` on the untransformed
+        rows under that same action, and the kept-row count it returns
+        gives the dropped-row counter. Decontamination reads the batch
+        twice (the benchmark n-gram join and the anti-join), so the
+        input is persisted while it runs and released here. The caller
+        owns the returned frame's unpersist after the sink commits
+        (``replay_stream`` does)."""
         t0 = time.monotonic()
-        batch = batch.persist()
         counters = [F.count(F.lit(1)).alias("__rows")]
         if self.redact_cols:
-            # the same aggregate counts every match before the text is
-            # rewritten (counts are an audit signal on the RAW input);
-            # null text must count 0, not poison the row's sum
+            # counts every match before the text is rewritten (counts
+            # are an audit signal on the RAW input); null text must
+            # count 0, not poison the row's sum
             per_col = [
                 sum(F.coalesce(cnt, F.lit(0)) for cnt in pii_counts(F.col(c)))
                 for c in self.redact_cols
             ]
             total = sum(per_col[1:], per_col[0]) if len(per_col) > 1 else per_col[0]
             counters.append(F.sum(total).alias("__pii"))
-        agg = batch.agg(*counters).collect()[0]
-        rows_in = int(agg["__rows"])
-        n_redacted = int(agg["__pii"] or 0) if self.redact_cols and rows_in else 0
-        if self.redact_cols and rows_in:
-            out = batch.withColumns(
-                {c: redact_pii(F.col(c)) for c in self.redact_cols}
-            )
-        else:
-            out = batch
-        n_dropped = 0
-        if self.benchmark is not None and rows_in:
+        if self.benchmark is not None:
+            batch = batch.persist()
+
+        def redact(df: DataFrame) -> DataFrame:
+            return df.withColumns({c: redact_pii(F.col(c)) for c in self.redact_cols})
+
+        obs = Observation()
+        out = redact(batch.observe(obs, *counters))
+        if self.benchmark is not None:
             # per-row contamination needs a row key: a composite key is
             # hashed into one synthetic id (unique within the batch is
-            # all the per-row distinct requires)
-            keyed = out.withColumn("__tid", F.xxhash64(*self.id_cols))
+            # all the per-row distinct requires). The scored side reads
+            # the unobserved batch, so the Observation sits once in the
+            # plan.
+            tid = F.xxhash64(*self.id_cols)
             scored = ngram_contamination(
-                keyed,
+                redact(batch).withColumn("__tid", tid),
                 self.benchmark,
                 n=self.decontam_n,
                 id_col="__tid",
@@ -122,17 +122,18 @@ class IngestTransforms:
                 normalize=self.normalize,
             ).filter(F.col("contamination") >= self.decontam_threshold)
             bad = scored.select(F.col("doc_id").alias("__tid"))
-            kept = keyed.join(F.broadcast(bad), "__tid", "left_anti").drop("__tid")
-            kept = kept.persist()
-            # this count both materializes the cache and yields the
-            # dropped-row counter — no separate action
-            n_dropped = rows_in - kept.count()
-            out = kept
-        elif out is not batch:
-            out = out.persist()
-            out.count()
-        if out is not batch:
-            # the returned frame carries its own cache now
+            out = (
+                out.withColumn("__tid", tid)
+                .join(F.broadcast(bad), "__tid", "left_anti")
+                .drop("__tid")
+            )
+        out = out.persist()
+        n_kept = out.count()
+        got = obs.get
+        rows_in = int(got["__rows"])
+        n_redacted = int(got["__pii"] or 0) if self.redact_cols else 0
+        n_dropped = rows_in - n_kept
+        if self.benchmark is not None:
             batch.unpersist()
         self.stats.append(
             MergeStats(

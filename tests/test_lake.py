@@ -3,6 +3,7 @@ schema evolution, snapshot expiry."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 
@@ -10,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sql_graph_visualizer_spark.lake import snapshot_table
 from sql_graph_visualizer_spark.lake.snapshot_table import SnapshotTable
 from sql_graph_visualizer_spark.operators.compaction import final_state
 from sql_graph_visualizer_spark.sources.cdc_gen import gen_cdc_log
@@ -98,18 +98,6 @@ def test_merge_only_rewrites_touched_buckets(spark, tmp_path):
     # hygiene: commit metadata IO is bounded by the batch's bucket set)
     rewritten = [b for b in m2["segments"] if b not in untouched]
     assert len(rewritten) == 1
-
-
-def test_merge_broadcast_fallback_same_result(spark, tmp_path, monkeypatch):
-    """Above _BROADCAST_MAX_KEYS the winner filter degrades to a keyed
-    shuffle semi-join — identical final state, no driver-side winner set."""
-    log = gen_cdc_log(spark, 800, num_convs=8, turns_per_conv=6)
-    t1, t2 = _table(spark, tmp_path, "a"), _table(spark, tmp_path, "b")
-    t1.merge_upsert(log, epoch_id=0, query_id="q")
-    monkeypatch.setattr(snapshot_table, "_BROADCAST_MAX_KEYS", 1)
-    st = t2.merge_upsert(log, epoch_id=0, query_id="q")
-    assert st.rows_in > 1  # the fallback path actually ran
-    assert _sorted_state(t1) == _sorted_state(t2)
 
 
 def test_cow_merge_batch_row_wins_tie_at_table_seq(spark, tmp_path):
@@ -478,11 +466,9 @@ def test_lineage_shared_recorder_fences_per_query(spark, tmp_path):
     ]
 
 
-def test_merge_fallback_keeps_null_key_rows(spark, tmp_path, monkeypatch):
-    """The size-guarded fallback semi-join must use null-safe key equality:
-    a winner row with a NULL key column must survive identically on both
-    paths — same batch, same merged state regardless of batch size
-    (ADVICE r2)."""
+def test_merge_fallback_keeps_null_key_rows(spark, tmp_path):
+    """Key equality in the MERGE fold is null-safe: a row with a NULL key
+    column survives, and identically in both merge modes (ADVICE r2)."""
     rows = [
         (1, "insert", None, 0, "user", "null-conv", None, None),
         (2, "insert", "c", None, "user", "null-turn", None, None),
@@ -493,13 +479,12 @@ def test_merge_fallback_keeps_null_key_rows(spark, tmp_path, monkeypatch):
         "seq long, op string, conv_id string, turn_idx int, role string, "
         "text string, tool string, ts timestamp",
     )
-    t1, t2 = _table(spark, tmp_path, "bc"), _table(spark, tmp_path, "fb")
+    t1, t2 = _table(spark, tmp_path, "cow"), _table(spark, tmp_path, "mor")
     t1.merge_upsert(mk(), epoch_id=0, query_id="q")
-    monkeypatch.setattr(snapshot_table, "_BROADCAST_MAX_KEYS", 1)
-    t2.merge_upsert(mk(), epoch_id=0, query_id="q")
+    t2.merge_upsert(mk(), epoch_id=0, query_id="q", mode="mor")
     s1, s2 = _sorted_state(t1), _sorted_state(t2)
     assert s1 == s2
-    assert len(s1) == 3  # NULL-key rows kept on both paths
+    assert len(s1) == 3  # NULL-key rows kept in both modes
 
 
 def test_legacy_inline_manifest_raises(spark, tmp_path):
@@ -638,3 +623,43 @@ def test_write_data_one_balanced_file_per_bucket(spark, tmp_path):
     # and the merged state is still the batch-oracle state
     got = t.read().count()
     assert got == final_state(log).count()
+
+
+def _stats_log(spark):
+    """A seeded log with re-delivered events (exact duplicates), deletes
+    and rows whose key has a NULL column."""
+    log = gen_cdc_log(spark, 1500, num_convs=10, turns_per_conv=8)
+    dups = log.filter(F.pmod(F.col("seq"), F.lit(5)) == 0)
+    null_conv = log.filter(F.pmod(F.col("seq"), F.lit(37)) == 0).withColumn(
+        "conv_id", F.lit(None).cast("string")
+    )
+    null_turn = log.filter(F.pmod(F.col("seq"), F.lit(41)) == 1).withColumn(
+        "turn_idx", F.lit(None).cast("int")
+    )
+    return log.unionByName(dups).unionByName(null_conv).unionByName(null_turn)
+
+
+# MergeStats (rows_in, upserts, deletes, buckets_touched, max_seq) per
+# epoch and the final state's row count and digest, pinned from the
+# two-pass MERGE (a persisted winner set, then a survivor semi-join)
+# that the one-pass MERGE replaced; both modes must reproduce them
+_PINNED_STATS = [(92, 83, 9, 6, 749), (94, 84, 10, 6, 1499)]
+_PINNED_STATE = (86, "d2032c13155a6ed8")
+
+
+def test_merge_stats_and_state_pinned(spark, tmp_path):
+    log = _stats_log(spark)
+    for mode in ("cow", "mor"):
+        t = _table(spark, tmp_path, mode)
+        got = []
+        for e, cond in enumerate(("seq < 750", "seq >= 750")):
+            st = t.merge_upsert(log.filter(cond), epoch_id=e, query_id="q", mode=mode)
+            got.append((st.rows_in, st.upserts, st.deletes, st.buckets_touched, st.max_seq))
+        # an empty epoch commits its fence and changes nothing
+        st = t.merge_upsert(log.limit(0), epoch_id=2, query_id="q", mode=mode)
+        assert (st.rows_in, st.skipped, st.buckets_touched) == (0, False, 0)
+        assert t.last_committed_epoch("q") == 2
+        rows = sorted(map(repr, map(tuple, t.read().collect())))
+        digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
+        assert got == _PINNED_STATS, mode
+        assert (len(rows), digest) == _PINNED_STATE, mode

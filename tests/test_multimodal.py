@@ -92,6 +92,44 @@ def test_real_wav_roundtrip_decodes_exact_samples(spark):
         assert r.max_amp == int(s.max())
 
 
+def test_wav_decodes_every_pcm_sample_width(spark):
+    """8-bit (unsigned, offset 128), 24-bit (packed signed) and 32-bit
+    WAVs written with the stdlib ``wave`` writer decode to the samples
+    numpy reads back from the same bytes."""
+    import io
+    import wave
+
+    import numpy as np
+
+    from sql_graph_visualizer_spark.operators.multimodal import WAV_SCHEMA, decode_wav
+
+    rng = np.random.default_rng(7)
+    expected, rows = {}, []
+    for mid, width in ((1, 1), (3, 3), (4, 4)):
+        bits = 8 * width
+        s = rng.integers(-(1 << (bits - 1)), 1 << (bits - 1), size=2 * 301, dtype=np.int64)
+        if width == 1:
+            raw = (s + 128).astype("u1").tobytes()
+        elif width == 3:
+            u = s & 0xFFFFFF
+            raw = np.stack([u & 0xFF, (u >> 8) & 0xFF, u >> 16], axis=1).astype("u1").tobytes()
+        else:
+            raw = s.astype("<i4").tobytes()
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(2)
+            w.setsampwidth(width)
+            w.setframerate(16000)
+            w.writeframes(raw)
+        rows.append((mid, "audio", buf.getvalue(), None))
+        expected[mid] = (width, len(s), int(np.abs(s).sum()), int(s.max()))
+    got = decode_wav(spark.createDataFrame(rows, WAV_SCHEMA)).collect()
+    assert {
+        r.media_id: (r.sample_width, r.n_samples, r.sum_abs, r.max_amp) for r in got
+    } == expected
+    assert {(r.n_channels, r.sample_rate) for r in got} == {(2, 16000)}
+
+
 def test_golden_bmp_bytes_decode_to_spec(spark):
     """Independent anchor for the BMP codec pair: a 2×2 24bpp BMP built
     LONGHAND from the format spec (not by synthesize_bmp — a writer and

@@ -496,6 +496,36 @@ def test_ingest_transforms_redact_decontam_with_lineage_counts(spark, tmp_path):
     assert sum(r.rows_in for r in rows) == log.count()
 
 
+def test_ingest_transforms_take_one_action(spark):
+    """With redaction or decontamination on, ``IngestTransforms.apply``
+    runs one driver action per epoch: the count that materializes the
+    transformed frame, with the raw counters on an Observation under it
+    (a separate counter aggregate before that count made it 7 and 12
+    jobs)."""
+    from sql_graph_visualizer_spark.streaming.transforms import IngestTransforms
+    from tests.test_api_resolvers import _jobs
+
+    secret = "the secret benchmark sentence appears here exactly verbatim"
+    rows = [
+        (i, f"doc {i} mail bob{i}@x.io" if i % 3 == 0 else secret if i % 5 == 1 else f"plain {i}")
+        for i in range(60)
+    ]
+    bench = spark.createDataFrame([(1, secret)], "doc_id long, text string")
+    for cfg, budget, dropped in (
+        ({}, 4, 0),
+        ({"benchmark": bench, "decontam_n": 3}, 11, 8),
+    ):
+        tf = IngestTransforms(redact_cols=["text"], id_cols=["doc_id"], **cfg)
+        batch = spark.createDataFrame(rows, "doc_id long, text string").repartition(3)
+        j0 = _jobs(spark)
+        out = tf.apply(batch, 0)
+        assert _jobs(spark) - j0 <= budget, cfg
+        st = tf.stats[-1]
+        assert (st.rows_in, st.upserts, st.deletes) == (60, 20, dropped)
+        assert out.count() == 60 - dropped
+        out.unpersist()
+
+
 def test_json_file_skipping_replay_matches_oracle(spark, tmp_path):
     """r8 file skipping (guide §6): a bounded replay over a tagged
     gzip-JSON log reads, per epoch, only the files whose seq range
