@@ -212,6 +212,7 @@ def q_cdc_ingest_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the hygiene counters are part of the observable contract: at least
     # one epoch must have redacted and dropped something
+    tf.close()
     assert sum(s.upserts for s in tf.stats) > 0
     assert sum(s.deletes for s in tf.stats) > 0
     return table.read()

@@ -32,7 +32,7 @@ Measurement protocol:
 - fixed plan at both levels: same shuffle partitions (64), same table
   bucket count (64); only executor count differs — exactly what scaling
   a real cluster changes;
-- pipelined replay (epoch N+1's per-key prepare pass overlaps epoch N's
+- pipelined replay (epoch N+1's bucket-set prepare pass overlaps epoch N's
   merge-write; known LSN bounds, no min/max pre-scan);
 - per leg: an untimed warmup replay (codegen+JIT compile), then three
   timed trials; min is reported (single-box timings are noisy);

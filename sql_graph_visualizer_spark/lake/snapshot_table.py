@@ -89,7 +89,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sql_graph_visualizer_spark.lake.file_io import LocalFileIO
-from sql_graph_visualizer_spark.operators.compaction import compact_lww
+from sql_graph_visualizer_spark.operators.compaction import compact_lww, lww_ranking
 from sql_graph_visualizer_spark.schema_evolution import align_to_schema, evolve_schema
 
 _SNAP_DIR = "snapshots"
@@ -244,8 +244,9 @@ class MergeStats:
     duration_ms: int
     snapshot_version: int
     # phase breakdown (not persisted to lineage): the copy-on-write
-    # per-key prepare vs the merge write (merge-on-read has no prepare:
-    # stats_ms is 0) — the observability hook for scaling analysis
+    # bucket-set prepare vs the merge write (a merge-on-read merge, or a
+    # copy-on-write one into an empty table, has no prepare: stats_ms is
+    # 0) — the observability hook for scaling analysis
     stats_ms: int = 0
     write_ms: int = 0
     # data bytes this commit added (sum of its new data-file sizes) — the
@@ -279,19 +280,15 @@ class CommitConflictError(RuntimeError):
 
 @dataclass
 class PreparedMerge:
-    """Result of the per-key pass (``merge_prepare``) — the
+    """Result of the bucket-set pass (``merge_prepare``) — the
     schema-independent half of a copy-on-write MERGE, computable before
     earlier epochs have committed, which is what lets a replay pipeline
-    epoch N+1's pass under epoch N's write. It holds only the epoch's
-    figures (key count, deletes, touched buckets, max LSN), no rows."""
+    epoch N+1's pass under epoch N's write. It holds only the buckets
+    the batch touches, no rows; the epoch's key, delete and max-LSN
+    figures come from the merge's own pass."""
 
-    rows_in: int
-    deletes: int
     affected: list[int]
     stats_ms: int
-    # batch-wide max LSN — committed into the manifest's per-query seq
-    # watermark (the tombstone-expiry safety horizon)
-    max_seq: int = -1
     # bucket spec the affected-bucket set was computed under; if a
     # rebucket step (a migration frontier advance or its finish)
     # commits between prepare and upsert, merge_upsert detects the
@@ -932,52 +929,29 @@ class SnapshotTable:
         op_col: str = "op",
         order_col: str = "seq",
     ) -> PreparedMerge:
-        """The per-key half of a copy-on-write MERGE: one column-pruned
-        pass over the batch (keys, order, op — a fixed-width
-        HashAggregate, map-side combined) that learns the batch's key
-        count, delete count, max LSN and touched buckets. The per-key
-        rows are not kept: a no-op write runs the aggregate and an
-        ``Observation`` over its output carries the four figures back.
-        Schema-INDEPENDENT: key/bucket columns never change type under
-        evolution, so this can run for epoch N+1 while epoch N's write is
-        still committing (pipelined replay). Caller passes the result to
-        ``merge_upsert(prepared=...)``."""
+        """The bucket-set half of a copy-on-write MERGE: one map-only
+        pass over the batch's bucket column (no shuffle) that learns the
+        buckets the batch touches — all the merge must know before it
+        reads them. A no-op write runs the pass and an ``Observation``
+        under it carries the set back. ``op_col`` and ``order_col`` are
+        not read. Schema-INDEPENDENT: key/bucket columns never change
+        type under evolution, so this can run for epoch N+1 while epoch
+        N's write is still committing (pipelined replay). Caller passes
+        the result to ``merge_upsert(prepared=...)``."""
         t0 = time.monotonic()
         m = self.manifest()
-        key_cols = m["key_cols"]
+        bc = m["bucket_col"]
         table_schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-        types = {f.name: f.dataType for f in table_schema.fields}
-        # cast keys to table types (widened batch ints etc.) so the bucket
+        # cast to the table's type (widened batch ints etc.) so the bucket
         # hash sees the same binary representation the table writes
-        keyed = batch.withColumns(
-            {k: F.col(k).cast(types[k]) for k in key_cols if k in types}
-        )
-        is_del = (F.col(op_col) == "delete").cast("int")
+        b = self._bucket_expr(m, F.col(bc).cast(table_schema[bc].dataType))
         obs = Observation()
-        (
-            keyed.groupBy(*key_cols)
-            .agg(
-                F.max(order_col).alias(order_col),
-                # feeds only the summary's delete count; the merged
-                # state is resolved by compact_lww
-                F.max_by(is_del, F.col(order_col)).alias("__del"),
-            )
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("__del").alias("d"),
-                F.max(order_col).alias("mx"),
-                F.collect_set(self._bucket_expr(m)).alias("bs"),
-            )
-            .write.format("noop").mode("overwrite").save()
-        )
-        agg = obs.get
+        batch.select(b.alias("__b")).observe(
+            obs, F.collect_set("__b").alias("bs")
+        ).write.format("noop").mode("overwrite").save()
         return PreparedMerge(
-            rows_in=int(agg["n"]),
-            deletes=int(agg["d"] or 0),
-            affected=sorted(int(b) for b in agg["bs"]),
+            affected=sorted(int(b) for b in obs.get["bs"]),
             stats_ms=int((time.monotonic() - t0) * 1000),
-            max_seq=int(agg["mx"]) if agg["mx"] is not None else -1,
             num_buckets=int(m["num_buckets"]),
             spec_token=self._spec_token(m),
         )
@@ -1024,11 +998,14 @@ class SnapshotTable:
         two different batch rows sharing (key, order) resolve by
         ``compact_lww``'s content order.
 
-        ``prepared``: a copy-on-write ``merge_prepare`` result for this
-        batch (a pipelined replay computes it under the previous epoch's
-        write); it is computed here when absent or when the table's
-        bucket spec changed since. Merge-on-read ignores it: its stats
-        come from the one pass that writes the deltas.
+        ``prepared``: a copy-on-write ``merge_prepare`` result (the
+        batch's bucket set) for this batch (a pipelined replay computes
+        it under the previous epoch's write); it is computed here when
+        absent or when the table's bucket spec changed since. Every
+        merge's stats come from the one pass that writes it. A
+        merge-on-read merge, and a copy-on-write merge into a table
+        with no data file and no delta, read no existing rows and
+        ignore it.
 
         ``ordered_writer``: whether this writer promises its FUTURE
         epochs carry only LSNs above this batch's max (the normal shape
@@ -1055,54 +1032,64 @@ class SnapshotTable:
         payload = [F.col(f.name) for f in table_schema.fields]
         batch_events = align_to_schema(
             batch, table_schema, keep_extra=[op_col, order_col]
-        ).select(*payload, F.col(order_col), F.col(op_col))
+        ).select(*payload, F.col(order_col), F.col(op_col), F.lit(1).alias("__src"))
+        obs = Observation()
 
-        def compact_route(
-            staged_events: DataFrame, order_cols: tuple[str, ...]
-        ) -> DataFrame:
+        def fold_write(staged_events: DataFrame) -> dict[str, list[dict[str, Any]]]:
             # ONE exchange for compact+write (r8, guide §2.4): route
-            # rows to their bucket's write partition FIRST, then run
-            # compact_lww's routed form — the routing columns are
-            # pure functions of the bucket column, so the groups are
+            # rows to their bucket's write partition FIRST, then rank
+            # them by compact_lww's routed form — the routing columns
+            # are pure functions of the bucket column, so the groups are
             # unchanged and the routing partitioning satisfies the
-            # fold's clustering: the staged payload moves once.
+            # fold's clustering: the staged payload moves once. Ranking
+            # on (seq, __src) makes a batch row (__src=1) beat a table
+            # row (__src=0, at most one per key) at the same seq
+            # (src.seq >= tgt._seq). The epoch's stats are observed on
+            # each key's best batch row: rank 1, or rank 2 behind a
+            # newer table row.
             routed, route_cols = self._route_for_write(staged_events, m)
-            folded = compact_lww(routed, tuple(key_cols), order_cols, route_cols)
-            return folded.select(
+            rows, rank = lww_ranking(
+                routed, tuple(key_cols), (order_col, "__src"), route_cols
+            )
+            rn, prev = F.col("__rn"), F.col("__prev")
+            best = (F.col("__src") == 1) & ((rn == 1) | ((rn == 2) & (prev == 0)))
+            ranked = rows.withColumns(
+                {"__rn": F.row_number().over(rank), "__prev": F.lag("__src").over(rank)}
+            ).observe(
+                obs,
+                F.count(F.when(best, 1)).alias("n"),
+                F.count(F.when(best & (F.col(op_col) == "delete"), 1)).alias("d"),
+                F.max(F.when(best, F.col(order_col))).alias("mx"),
+            )
+            folded = ranked.where(rn == 1).select(
                 *payload,
                 F.col(order_col).cast("long").alias(_SEQ),
                 (F.col(op_col) == "delete").alias(_DELETED),
                 "__b",
             )
+            return self._write_data(folded, m, pre_routed=True)
 
         # Scan discipline: each mode reads the raw batch's payload once,
-        # in the one routed exchange of compact_route; copy-on-write adds
-        # the column-pruned per-key pass of merge_prepare (overlappable
-        # with the previous epoch's write), because it must know the
-        # touched buckets before it reads them. That exchange carries
-        # every batch event, so an update storm on one hot key lands in
-        # one write task; the salted pre-compaction of operators/skew.py
-        # (replay's hot_threshold) is the tool for such batches.
+        # in the one routed exchange of fold_write. Merge-on-read, and
+        # copy-on-write into a table with no rows, read nothing else:
+        # the buckets written are the buckets touched. Copy-on-write
+        # into a non-empty table first runs merge_prepare's map-only
+        # bucket-set pass (overlappable with the previous epoch's
+        # write), because it must know the touched buckets before it
+        # reads them. That exchange carries every batch event, so an
+        # update storm on one hot key lands in one write task; the
+        # salted pre-compaction of operators/skew.py (replay's
+        # hot_threshold) is the tool for such batches.
         t_stats = time.monotonic()
-        if mode == "mor":
-            # Merge-on-read: never read the base. The batch's per-key
+        stats_ms, new_files = 0, None
+        if mode == "mor" or (not m["segments"] and not any(self._delta_refs(m).values())):
+            # Merge-on-read never reads the base: the batch's per-key
             # winners are written as delta segments, deletes persisting
-            # as tombstone rows; the epoch's stats are observed on the
-            # folded rows as they are written. Bytes written ∝ |batch|,
-            # not touched-bucket bytes.
-            obs = Observation()
-            folded = compact_route(batch_events, (order_col,)).observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col(_DELETED).cast("int")).alias("d"),
-                F.max(_SEQ).alias("mx"),
-            )
-            new_files = self._write_data(folded, m, pre_routed=True)
-            got = obs.get
-            rows_in, deletes = int(got["n"]), int(got["d"] or 0)
-            max_seq = int(got["mx"]) if got["mx"] is not None else -1
+            # as tombstone rows; bytes written ∝ |batch|, not
+            # touched-bucket bytes. An empty copy-on-write base has
+            # nothing to read, so any ``prepared`` is ignored.
+            new_files = fold_write(batch_events)
             affected = sorted(int(b) for b in new_files)
-            stats_ms = 0
         else:
             if prepared is None or prepared.spec_token != self._spec_token(m):
                 # none given, or a rebucket (or a progressive-migration
@@ -1111,9 +1098,28 @@ class SnapshotTable:
                 # with it would read the wrong buckets
                 prepared = self.merge_prepare(batch, op_col=op_col, order_col=order_col)
                 t_stats = time.monotonic()
-            rows_in, deletes = prepared.rows_in, prepared.deletes
-            max_seq, affected = prepared.max_seq, prepared.affected
-            stats_ms = prepared.stats_ms
+            affected, stats_ms = prepared.affected, prepared.stats_ms
+            if affected:
+                # Versioned MERGE: re-express current rows (incl.
+                # persisted tombstones) as change events carrying their
+                # committed _seq, union with the batch events, and let
+                # one LWW compaction pick the max-seq winner per key.
+                # Equivalent to
+                #   WHEN MATCHED AND src.seq >= tgt._seq AND op='delete' THEN DELETE
+                #   WHEN MATCHED AND src.seq >= tgt._seq THEN UPDATE
+                #   WHEN NOT MATCHED AND op!='delete' THEN INSERT
+                # but correct under out-of-order epochs and event
+                # re-delivery (a stale version can never overwrite a
+                # newer one).
+                existing = self.read(buckets=affected, manifest=m, system=True)
+                new_files = fold_write(existing.select(
+                    *payload,
+                    F.col(_SEQ).alias(order_col),
+                    F.when(F.col(_DELETED), F.lit("delete")).otherwise(F.lit("update")).alias(op_col),
+                    F.lit(0).alias("__src"),
+                ).unionByName(batch_events))
+        # a batch that touches no bucket ran no write to fill obs
+        rows_in = 0 if new_files is None else int(obs.get["n"])
         if rows_in == 0:
             def build_empty(c: dict[str, Any]) -> None:
                 c["summary"] = {
@@ -1130,11 +1136,17 @@ class SnapshotTable:
                 epoch_id, 0, 0, 0, 0, committed is None,
                 int((time.monotonic() - t0) * 1000), v,
             )
+        got = obs.get
+        deletes = int(got["d"])
+        max_seq = int(got["mx"]) if got["mx"] is not None else -1
+        # segment files for the touched buckets are written ONCE, up
+        # front; a rebase-retry re-points the same immutable segments
+        # (copy-on-write: validate() guarantees the base buckets didn't
+        # change). Metadata bytes written per commit ∝ touched buckets.
+        new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
+        bytes_written = sum(int(r["bytes"]) for r in new_segs.values())
 
         if mode == "mor":
-            new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
-            bytes_written = sum(int(r["bytes"]) for r in new_segs.values())
-
             def build_mor(c: dict[str, Any]) -> None:
                 # delta commits commute: nothing was read, so a rebase
                 # just re-appends the same immutable delta refs onto
@@ -1193,38 +1205,6 @@ class SnapshotTable:
         else:
             affected_set = set(affected)
             base_tokens = {b: self._bucket_token(m, b) for b in affected}
-            # Versioned MERGE: re-express current rows (incl. persisted
-            # tombstones) as change events carrying their committed _seq,
-            # union with the batch events, and let one LWW compaction
-            # pick the max-seq winner per key. Equivalent to
-            #   WHEN MATCHED AND src.seq >= tgt._seq AND op='delete' THEN DELETE
-            #   WHEN MATCHED AND src.seq >= tgt._seq THEN UPDATE
-            #   WHEN NOT MATCHED AND op!='delete' THEN INSERT
-            # but correct under out-of-order epochs and event re-delivery
-            # (a stale version can never overwrite a newer one).
-            existing = self.read(buckets=affected, manifest=m, system=True)
-            existing_events = existing.select(
-                *payload,
-                F.col(_SEQ).alias(order_col),
-                F.when(F.col(_DELETED), F.lit("delete")).otherwise(F.lit("update")).alias(op_col),
-                F.lit(0).alias("__src"),
-            )
-            # the whole union→compact→bucket-write pipeline runs as one
-            # job sharing ONE exchange (see compact_route). Folding on
-            # (seq, __src) makes a batch row beat a table row at the same
-            # seq (src.seq >= tgt._seq).
-            staged = existing_events.unionByName(
-                batch_events.withColumn("__src", F.lit(1))
-            )
-            new_files = self._write_data(
-                compact_route(staged, (order_col, "__src")), m, pre_routed=True
-            )
-            # segment files for the touched buckets are written ONCE, up
-            # front; a rebase-retry re-points the same immutable segments
-            # (validate() guarantees the base buckets didn't change).
-            # Metadata bytes written per commit ∝ touched buckets.
-            new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
-            bytes_written = sum(int(r["bytes"]) for r in new_segs.values())
 
             def build(c: dict[str, Any]) -> None:
                 refs = {

@@ -39,7 +39,7 @@ than only the rows at each key's max.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,6 +71,24 @@ def compact_lww(
     survive as ``op='delete'`` rows (the MERGE arm drops them).
     ``route_cols``: ``rows`` are already hash-partitioned on these
     functions of the key; the fold then adds no exchange."""
+    rows, rank = lww_ranking(rows, key_cols, order_cols, route_cols)
+    return (
+        rows.withColumn("__rn", F.row_number().over(rank))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def lww_ranking(
+    rows: DataFrame,
+    key_cols: tuple[str, ...],
+    order_cols: tuple[str, ...],
+    route_cols: tuple[str, ...] = (),
+) -> tuple[DataFrame, WindowSpec]:
+    """The rows :func:`compact_lww` ranks and the window that ranks them,
+    best first; its winners are ``row_number() == 1`` over that window.
+    A caller that needs the losing versions too (the MERGE counts each
+    key's best batch row behind a newer table row) ranks them itself."""
     group = [*route_cols, *key_cols]
     if not route_cols:
         top = order_cols[0]
@@ -88,11 +106,7 @@ def compact_lww(
     rank = Window.partitionBy(*group).orderBy(
         *[F.col(c).desc() for c in (*order_cols, *rest)]
     )
-    return (
-        rows.withColumn("__rn", F.row_number().over(rank))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return rows, rank
 
 
 def final_state(

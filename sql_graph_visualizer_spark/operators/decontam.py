@@ -11,13 +11,15 @@ external corpus instead of self-similarity.
 Scale shape (100 TB corpus, ~10^5-10^6 benchmark docs): the benchmark's
 distinct n-gram set is small relative to the corpus (benchmarks are
 curated eval sets, not crawls) — build it once, broadcast it, and the
-corpus side streams through map-side: explode → per-doc distinct
-(hash-agg) → broadcast left join → per-doc ratio. The corpus text
-never shuffles; the only shuffled rows are (doc_id, gram) pairs for
-the per-doc distinct, and that shuffle is what any exact per-doc set
-metric costs. For a benchmark too big to broadcast, pass
-``broadcast_benchmark=False`` to fall back to a shuffle join on the
-gram — same result, one more exchange.
+corpus side streams through: explode → partition by doc → per-doc
+distinct (hash-agg) → broadcast left join → per-doc ratio. The corpus
+text never shuffles; the only shuffled rows are (doc_id, gram) pairs,
+moved once (the distinct and the ratio share that doc_id
+partitioning), and that shuffle is what any exact per-doc set metric
+costs. ``benchmark_ngrams`` builds the set on its own, so a stream
+scoring many batches builds and caches it once. For a benchmark too big
+to broadcast, pass ``broadcast_benchmark=False`` to fall back to a
+shuffle join on the gram — same result, more exchanges.
 
 Zero Python UDFs: n-grams are array expressions (the guarded
 ``sequence``/``transform`` pattern shared with ``repetition_profile``
@@ -60,6 +62,21 @@ def _word_ngrams(text_col: str, n: int, normalize: bool = False) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+def benchmark_ngrams(
+    benchmark: DataFrame, n: int = 8, text_col: str = "text", normalize: bool = False
+) -> DataFrame:
+    """The benchmark's distinct word ``n``-gram set, one ``g`` row per
+    gram (with the constant ``__hit`` the scoring join counts). A caller
+    that scores many corpus batches against one benchmark persists this
+    once and passes it to :func:`contamination_scores`."""
+    return (
+        benchmark.select(_word_ngrams(text_col, n, normalize=normalize).alias("gs"))
+        .select(F.explode("gs").alias("g"))
+        .distinct()
+        .withColumn("__hit", F.lit(1))
+    )
+
+
 def ngram_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -78,22 +95,35 @@ def ngram_contamination(
     so a repetitive document cannot inflate its own score). A full copy
     of a benchmark doc scores 1.0; untouched documents are absent
     (filter or anti-join on this result to decontaminate)."""
+    bench = benchmark_ngrams(benchmark, n, text_col, normalize)
+    return contamination_scores(
+        corpus, bench, n, id_col, text_col, broadcast_benchmark, normalize
+    )
+
+
+def contamination_scores(
+    corpus: DataFrame,
+    bench_grams: DataFrame,
+    n: int = 8,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    broadcast_benchmark: bool = True,
+    normalize: bool = False,
+) -> DataFrame:
+    """:func:`ngram_contamination` against a prebuilt
+    :func:`benchmark_ngrams` set (same ``n`` and ``normalize``). The
+    ``(doc_id, g)`` pairs are hash-partitioned by ``doc_id`` once: that
+    exchange serves both the per-doc distinct and the per-doc ratio."""
     grams = (
         corpus.select(
             F.col(id_col).alias("doc_id"),
             _word_ngrams(text_col, n, normalize=normalize).alias("gs"),
         )
         .select("doc_id", F.explode("gs").alias("g"))
+        .repartition("doc_id")
         .dropDuplicates(["doc_id", "g"])
     )
-    bench = (
-        benchmark.select(_word_ngrams(text_col, n, normalize=normalize).alias("gs"))
-        .select(F.explode("gs").alias("g"))
-        .distinct()
-        .withColumn("__hit", F.lit(1))
-    )
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
+    bench = F.broadcast(bench_grams) if broadcast_benchmark else bench_grams
     return (
         grams.join(bench, on="g", how="left")
         .groupBy("doc_id")

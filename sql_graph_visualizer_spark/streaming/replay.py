@@ -349,22 +349,25 @@ def replay_batch(
     ``bounds``: pass the known (lo, hi) LSN range (a binlog tail always
     knows it) to skip a full-log min/max scan.
 
-    ``pipeline``: with ``merge_mode="cow"``, overlap epoch N+1's per-key
-    pass (``merge_prepare`` — schema-independent, so safe before N
-    commits) with epoch N's merge-write job. The two jobs share the
-    executors, so the win is utilization — the per-key pass fills the
+    ``pipeline``: with ``merge_mode="cow"``, overlap epoch N+1's
+    map-only bucket-set pass (``merge_prepare`` — schema-independent, so
+    safe before N commits) with epoch N's merge-write job. The two jobs
+    share the executors, so the win is utilization — the pass fills the
     scheduler gaps, barrier waits and straggler tails of the write
     stage, which is exactly the time a bigger cluster otherwise wastes.
     Commit order, fencing and results are unchanged (the prepared
-    figures are a pure function of the chunk). A merge-on-read merge is
-    one pass with no prepare, so there is nothing to overlap.
+    bucket set is a pure function of the chunk). Epoch 0's merge runs
+    its own prepare, or none when the table is empty, since nothing
+    runs before it to overlap; a merge-on-read merge is one pass with
+    no prepare, so there is nothing to overlap.
 
     ``persist_log`` (r8, guide §1.2/§5): cache the source log for the
-    duration of the replay. A copy-on-write epoch scans its chunk twice
-    (the column-pruned per-key pass in ``merge_prepare`` plus the
-    full-payload merge), a merge-on-read epoch once, so an
-    ``epochs``-epoch replay performs up to ``2×epochs`` source scans —
-    for a gzip-JSON binlog tail, as many full decompress+parse passes.
+    duration of the replay. A copy-on-write epoch into a non-empty table
+    scans its chunk twice (the bucket-column pass in ``merge_prepare``
+    plus the full-payload merge); one into an empty table, or a
+    merge-on-read epoch, scans it once. So an ``epochs``-epoch replay
+    performs up to ``2×epochs - 1`` source scans — for a gzip-JSON
+    binlog tail, as many full decompress+parse passes.
     Caching turns that into ONE parse + cheap columnar-cache reads.
 
     The default (None) is SCALE-ADAPTIVE, decided from the replay's own
@@ -467,10 +470,6 @@ def replay_batch(
         pipeline = pipeline and merge_mode == "cow"
         with ThreadPoolExecutor(max_workers=1) as pool:
             nxt = None
-            if pipeline:
-                nxt = pool.submit(
-                    table.merge_prepare, chunk_of(0), order_col=order_col
-                )
             for e in range(epochs):
                 chunk = chunk_of(e)
                 prepared = nxt.result() if nxt is not None else None

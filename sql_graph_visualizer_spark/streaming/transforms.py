@@ -22,7 +22,9 @@ the counters are an ``Observation`` on the batch, collected by the
 count that materializes the transformed frame (no pass of their own). Decontam
 keeps the broadcast-benchmark shape of the batch operator — the corpus
 (batch) text never shuffles; only (row, gram) pairs for the per-row
-distinct do, and that is what any exact per-row set metric costs.
+distinct do, and that is what any exact per-row set metric costs. The
+benchmark's n-gram set is built and cached once per ``IngestTransforms``
+(released by ``close()``), not once per epoch.
 """
 
 from __future__ import annotations
@@ -33,7 +35,10 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from sql_graph_visualizer_spark.lake.snapshot_table import MergeStats
-from sql_graph_visualizer_spark.operators.decontam import ngram_contamination
+from sql_graph_visualizer_spark.operators.decontam import (
+    benchmark_ngrams,
+    contamination_scores,
+)
 from sql_graph_visualizer_spark.operators.text import pii_counts, redact_pii
 from sql_graph_visualizer_spark.streaming.metrics import LineageRecorder
 
@@ -48,7 +53,8 @@ class IngestTransforms:
     DROPPED before they reach the sink (the GPT-3 appendix-C hygiene
     step, applied online). ``id_cols``: columns that uniquely identify
     a row WITHIN one batch (the per-row distinct-gram key) — a
-    composite key is fine.
+    composite key is fine. Call ``close()`` when the stream ends: it
+    releases the cached benchmark n-gram set.
     """
 
     def __init__(
@@ -70,6 +76,7 @@ class IngestTransforms:
         self.normalize = normalize
         # (epoch_id, MergeStats-shaped counters) per applied epoch
         self.stats: list[MergeStats] = []
+        self._bench_grams: DataFrame | None = None
 
     def apply(self, batch: DataFrame, epoch_id: int) -> DataFrame:
         """Transform one micro-batch; counters land in ``self.stats``.
@@ -113,9 +120,16 @@ class IngestTransforms:
             # the unobserved batch, so the Observation sits once in the
             # plan.
             tid = F.xxhash64(*self.id_cols)
-            scored = ngram_contamination(
+            if self._bench_grams is None:
+                # the benchmark is fixed for the stream: its distinct
+                # n-gram set is built by the first epoch's action and
+                # read from cache by every later one
+                self._bench_grams = benchmark_ngrams(
+                    self.benchmark, self.decontam_n, self.text_col, self.normalize
+                ).persist()
+            scored = contamination_scores(
                 redact(batch).withColumn("__tid", tid),
-                self.benchmark,
+                self._bench_grams,
                 n=self.decontam_n,
                 id_col="__tid",
                 text_col=self.text_col,
@@ -148,6 +162,13 @@ class IngestTransforms:
             )
         )
         return out
+
+    def close(self) -> None:
+        """Release the cached benchmark n-gram set; a later ``apply``
+        builds it again."""
+        if self._bench_grams is not None:
+            self._bench_grams.unpersist()
+            self._bench_grams = None
 
     def record(self, lineage: LineageRecorder | None, query_id: str) -> None:
         """Flush accumulated counters to the lineage table under

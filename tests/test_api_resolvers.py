@@ -17,14 +17,9 @@ from sql_graph_visualizer_spark.operators.compaction import final_state
 from sql_graph_visualizer_spark.plans.transcript_rules import build_transcript_graph
 from sql_graph_visualizer_spark.sources.cdc_gen import gen_cdc_log
 
-from tests.test_lake import _table
+from tests.conftest import _jobs, _table
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _jobs(spark) -> int:
-    """Jobs the DAG scheduler has started in this session so far."""
-    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
 def _cache_empty(spark) -> bool:

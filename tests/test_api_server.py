@@ -13,7 +13,8 @@ import urllib.request
 from sql_graph_visualizer_spark.api import GraphQueryResolver
 from sql_graph_visualizer_spark.api.server import GraphQLServer
 
-from tests.test_api_resolvers import _graph, _jobs
+from tests.conftest import _jobs
+from tests.test_api_resolvers import _graph
 
 
 def _post(port: int, payload: dict) -> dict:

@@ -15,23 +15,7 @@ from sql_graph_visualizer_spark.lake.snapshot_table import SnapshotTable
 from sql_graph_visualizer_spark.operators.compaction import final_state
 from sql_graph_visualizer_spark.sources.cdc_gen import gen_cdc_log
 
-SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ]
-)
-KEYS = ["conv_id", "turn_idx"]
-
-
-def _table(spark, tmp_path, name="t", buckets=8):
-    return SnapshotTable.create(
-        spark, os.path.join(str(tmp_path), name), SCHEMA, KEYS, num_buckets=buckets
-    )
+from tests.conftest import KEYS, SCHEMA, _table
 
 
 def _sorted_state(t):
@@ -663,3 +647,41 @@ def test_merge_stats_and_state_pinned(spark, tmp_path):
         digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
         assert got == _PINNED_STATS, mode
         assert (len(rows), digest) == _PINNED_STATE, mode
+
+
+# Copy-on-write MergeStats where a key's best batch row can rank behind
+# a table row: an out-of-order epoch (the table holds the newer half of
+# the log, so its row outranks every batch row of a key both carry) and
+# a merge over buckets carrying merge-on-read deltas. Pinned from the
+# MERGE whose prepare counted keys and deletes with a per-key aggregate.
+_PINNED_OOO = [(94, 84, 10, 6, 1499), (92, 83, 9, 6, 749)]
+_PINNED_OVER_DELTAS = [(88, 77, 11, 6, 499), (91, 81, 10, 6, 999), (87, 78, 9, 6, 1499)]
+
+
+def test_cow_merge_stats_pinned_out_of_order_and_over_deltas(spark, tmp_path):
+    log = _stats_log(spark)
+    cases = (
+        ("ooo", (("seq >= 750", "cow"), ("seq < 750", "cow")), _PINNED_OOO),
+        (
+            "mix",
+            (
+                ("seq < 500", "cow"),
+                ("seq >= 500 and seq < 1000", "mor"),
+                ("seq >= 1000", "cow"),
+            ),
+            _PINNED_OVER_DELTAS,
+        ),
+    )
+    for name, epochs, pinned in cases:
+        t = _table(spark, tmp_path, name)
+        got = []
+        for e, (cond, mode) in enumerate(epochs):
+            st = t.merge_upsert(
+                log.filter(cond), epoch_id=e, query_id="q", mode=mode, ordered_writer=False
+            )
+            got.append((st.rows_in, st.upserts, st.deletes, st.buckets_touched, st.max_seq))
+        rows = sorted(map(repr, map(tuple, t.read().collect())))
+        digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
+        assert got == pinned, name
+        assert (len(rows), digest) == _PINNED_STATE, name
+

@@ -18,7 +18,7 @@ from hypothesis import strategies as st
 
 from sql_graph_visualizer_spark.lake.snapshot_table import SnapshotTable
 
-from tests.test_lake import KEYS, SCHEMA
+from tests.conftest import KEYS, SCHEMA
 
 # a NULL turn index is a legal key value: key equality must be null-safe
 KEY_POOL = [("c0", 0), ("c0", 1), ("c1", 0), ("c1", None), ("c2", 0)]

@@ -26,7 +26,8 @@ from sql_graph_visualizer_spark.operators.compaction import final_state
 from sql_graph_visualizer_spark.sources.cdc_gen import gen_cdc_log
 from sql_graph_visualizer_spark.streaming.replay import merge_with_retry, replay_batch
 
-from tests.test_lake import KEYS, SCHEMA, _sorted_state, _table
+from tests.conftest import KEYS, SCHEMA, _table
+from tests.test_lake import _sorted_state
 
 
 def _state(t):

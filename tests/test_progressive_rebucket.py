@@ -29,7 +29,7 @@ from sql_graph_visualizer_spark.operators.compaction import final_state
 from sql_graph_visualizer_spark.sources.cdc_gen import gen_cdc_log
 from sql_graph_visualizer_spark.streaming.replay import merge_with_retry, replay_batch
 
-from tests.test_lake import _table
+from tests.conftest import _table
 from tests.test_mor import _expected, _state
 
 
