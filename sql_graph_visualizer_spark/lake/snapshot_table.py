@@ -944,9 +944,9 @@ class SnapshotTable:
         table_schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
         # cast to the table's type (widened batch ints etc.) so the bucket
         # hash sees the same binary representation the table writes
-        b = self._bucket_expr(m, F.col(bc).cast(table_schema[bc].dataType))
+        bucket = self._bucket_expr(m, F.col(bc).cast(table_schema[bc].dataType))
         obs = Observation()
-        batch.select(b.alias("__b")).observe(
+        batch.select(bucket.alias("__b")).observe(
             obs, F.collect_set("__b").alias("bs")
         ).write.format("noop").mode("overwrite").save()
         return PreparedMerge(
