@@ -890,7 +890,10 @@ class SnapshotTable:
         else:
             staged, _ = self._route_for_write(df, m)
             staged = staged.drop("__p")
-        staged.write.partitionBy("__b").mode("overwrite").parquet(commit_abs)
+        # binary min/max cut to 16 bytes, as Iceberg's default truncate(16) metrics
+        staged.write.partitionBy("__b").mode("overwrite").option(
+            "parquet.statistics.truncate.length", 16
+        ).parquet(commit_abs)
         out: dict[str, list[dict[str, Any]]] = {}
         for d in self.io.listdir(commit_abs):
             if not d.startswith("__b="):

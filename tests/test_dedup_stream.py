@@ -377,20 +377,24 @@ def test_soak_everything_on_streaming_dedup_pipeline(spark, tmp_path):
         lineage=lineage,
     )
 
-    for e, ids in enumerate(epochs):
-        ingest.process(_docs_df(spark, [(i, docs[i]) for i in ids]), e)
-        if e == 3:
-            # mid-run GC on every table, retention covering the stream's
-            # re-delivery horizon (the documented caveat)
-            for t in (ingest.index.table, ingest.matches, ingest.corpus):
-                t.expire_snapshots(keep_last=30)
-        if e == 5:
-            # re-deliver the epoch just processed: all four arms fenced
-            st, mst = ingest.process(
-                _docs_df(spark, [(i, docs[i]) for i in epochs[5]]), 5
-            )
-            dst, ast = ingest.corpus_stats[-1]
-            assert st.skipped and mst.skipped and dst.skipped and ast.skipped
+    try:
+        for e, ids in enumerate(epochs):
+            ingest.process(_docs_df(spark, [(i, docs[i]) for i in ids]), e)
+            if e == 3:
+                # mid-run GC on every table, retention covering the stream's
+                # re-delivery horizon (the documented caveat)
+                for t in (ingest.index.table, ingest.matches, ingest.corpus):
+                    t.expire_snapshots(keep_last=30)
+            if e == 5:
+                # re-deliver the epoch just processed: all four arms fenced
+                st, mst = ingest.process(
+                    _docs_df(spark, [(i, docs[i]) for i in epochs[5]]), 5
+                )
+                dst, ast = ingest.corpus_stats[-1]
+                assert st.skipped and mst.skipped and dst.skipped and ast.skipped
+    finally:
+        transforms.close()
+    assert transforms._bench_grams is None
 
     # one-shot oracle over the TRANSFORMED corpus: redact everything,
     # drop the contaminated doc, then decide in a single pass

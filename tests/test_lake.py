@@ -3,10 +3,13 @@ schema evolution, snapshot expiry."""
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import json
 import os
 import re
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -685,3 +688,101 @@ def test_cow_merge_stats_pinned_out_of_order_and_over_deltas(spark, tmp_path):
         assert got == pinned, name
         assert (len(rows), digest) == _PINNED_STATE, name
 
+
+
+
+def _parquet_files(t):
+    """Every data file the table has written, current or replaced."""
+    return sorted(glob.glob(os.path.join(t.path, "data", "**", "*.parquet"), recursive=True))
+
+
+def _ts_column(path):
+    schema = pq.ParquetFile(path).metadata.schema
+    return schema.column(schema.names.index("ts"))
+
+
+def test_data_files_use_iceberg_physical_layout(spark, tmp_path):
+    """Every lake write (CoW merge, MoR delta, delta fold, rebucket)
+    stores ``ts`` as INT64 TIMESTAMP(MICROS, UTC-adjusted), as the
+    Iceberg spec does, and cuts binary min/max statistics to at most 16
+    bytes, as Iceberg's default truncate(16) metrics do."""
+    log = gen_cdc_log(spark, 600, num_convs=6, turns_per_conv=6)
+    cow, mor = _table(spark, tmp_path, "cow", buckets=4), _table(spark, tmp_path, "mor", buckets=4)
+    for cond in ("seq < 300", "seq >= 300"):
+        cow.merge_upsert(log.filter(cond))
+        mor.merge_upsert(log.filter(cond), mode="mor")
+    mor.compact_deltas()
+    mor.rebucket(8)
+    files = _parquet_files(cow) + _parquet_files(mor)
+    assert len(files) > 8
+    binary_stats = 0
+    for f in files:
+        ts = _ts_column(f)
+        assert ts.physical_type == "INT64", f
+        logical = json.loads(ts.logical_type.to_json())
+        assert (logical["Type"], logical["isAdjustedToUTC"], logical["timeUnit"]) == (
+            "Timestamp", True, "microseconds"
+        ), f
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(rg).column(c)
+                if col.physical_type != "BYTE_ARRAY" or not col.is_stats_set:
+                    continue
+                st = col.statistics
+                if st.has_min_max:
+                    binary_stats += 1
+                    assert len(st.min_raw) <= 16 and len(st.max_raw) <= 16, (f, col.path_in_schema)
+    assert binary_stats > len(files)
+
+
+def test_int96_lake_keeps_reading_under_int64_writes(spark, tmp_path):
+    """A table whose first commit holds legacy INT96 timestamps keeps
+    working once later commits write INT64: reads over INT96 bases,
+    INT64 bases and INT64 deltas agree with a last-writer-wins
+    recomputation (``ts`` included), and an equality filter on a
+    ``text`` longer than the 16-byte statistics still finds its row."""
+    key = "spark.sql.parquet.outputTimestampType"
+    log = gen_cdc_log(spark, 900, num_convs=8, turns_per_conv=6).withColumn(
+        "ts", F.timestamp_add("MICROSECOND", F.col("seq") * 7, F.col("ts"))
+    )
+    t = _table(spark, tmp_path, buckets=4)
+    merged = ["seq < 450"]
+    old = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        t.merge_upsert(log.filter(merged[0]), epoch_id=0, query_id="q")
+    finally:
+        spark.conf.set(key, old)
+    assert all(_ts_column(f).physical_type == "INT96" for f in _parquet_files(t))
+
+    def check():
+        latest = {}
+        for r in log.filter(" or ".join(f"({c})" for c in merged)).collect():
+            k = (r.conv_id, r.turn_idx)
+            if k not in latest or r.seq > latest[k].seq:
+                latest[k] = r
+        want = {k: (r.role, r.text, r.tool, r.ts) for k, r in latest.items() if r.op != "delete"}
+        got = {(r.conv_id, r.turn_idx): (r.role, r.text, r.tool, r.ts) for r in t.read().collect()}
+        assert got == want
+        texts = sorted(w[1] for w in want.values())
+        for v in (texts[0], texts[len(texts) // 2], texts[-1]):
+            assert len(v.encode()) > 16
+            hits = t.read().filter(F.col("text") == v).collect()
+            assert sorted((r.conv_id, r.turn_idx) for r in hits) == sorted(
+                k for k, w in want.items() if w[1] == v
+            ), v
+
+    # each later epoch carries one conversation, so untouched buckets
+    # keep their INT96 base files
+    convs = [r.conv_id for r in log.select("conv_id").distinct().orderBy("conv_id").collect()]
+    merged.append(f"seq >= 450 and seq < 700 and conv_id = '{convs[0]}'")
+    t.merge_upsert(log.filter(merged[-1]), epoch_id=1, query_id="q")
+    check()
+    merged.append(f"seq >= 700 and conv_id = '{convs[-1]}'")
+    t.merge_upsert(log.filter(merged[-1]), epoch_id=2, query_id="q", mode="mor")
+    check()
+    t.compact_deltas()
+    check()
+    live = {_ts_column(os.path.join(t.path, e["path"])).physical_type for e in t._entries(t.manifest())}
+    assert live == {"INT96", "INT64"}

@@ -476,10 +476,14 @@ def test_ingest_transforms_redact_decontam_with_lineage_counts(spark, tmp_path):
         redact_cols=["text"], benchmark=bench, decontam_n=3,
         decontam_threshold=0.5, id_cols=["conv_id", "turn_idx", "seq"],
     )
-    replay_stream(
-        spark, log_dir, t, str(tmp_path / "ckpt"),
-        max_files_per_trigger=2, lineage=lin, transforms=tf,
-    )
+    try:
+        replay_stream(
+            spark, log_dir, t, str(tmp_path / "ckpt"),
+            max_files_per_trigger=2, lineage=lin, transforms=tf,
+        )
+    finally:
+        tf.close()
+    assert tf._bench_grams is None
     assert _state(t) == expected
     # counters: upserts = PII values redacted, deletes = rows dropped
     rows = (
